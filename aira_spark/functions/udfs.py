@@ -18,7 +18,7 @@ from pyspark.sql.pandas.functions import pandas_udf
 
 from ..tiff import tags as T
 from ..tiff.meta import TiffError, decode_metadata, entry_value, pixel_chunks
-from ..tiff.pixels import decode_chunk, psnr
+from ..tiff.pixels import decode_chunk, psnr, sample_dtype
 from .cells import DEFAULT_RES, np_cell_from_xy
 
 META_SCHEMA = Ty.StructType(
@@ -118,8 +118,8 @@ def _meta_dict_to_row(m: dict) -> dict:
         "spp": m["spp"],
         "bits": m["bits"],
         "formats": m["formats"],
-        "offsets": [int(o) for o in m["offsets"]],
-        "byte_counts": [int(b) for b in m["byte_counts"]],
+        "offsets": m["offsets"],
+        "byte_counts": m["byte_counts"],
         "description": m["description"],
         "subfile_type": m["subfile_type"],
         "resolution": (
@@ -144,10 +144,7 @@ def _meta_dict_to_row(m: dict) -> dict:
         "tie_j": None,
         "tie_x": None,
         "tie_y": None,
-        "custom": {
-            int(tag): (int(d), int(c), bytes(raw))
-            for tag, (d, c, raw) in m["custom"].items()
-        },
+        "custom": m["custom"],
     }
     bo = m["byteorder"]
     scale = m["custom"].get(T.MODEL_PIXEL_SCALE)
@@ -192,19 +189,23 @@ decode_meta_pages = decode_meta_pages.asNondeterministic()
 
 
 def _decode_full(buf: bytes, max_bands: int | None = None) -> tuple[dict, np.ndarray]:
-    """Decode and stitch the (h, w, n_bands) image.
+    """Decode the metadata, then the pixels (see decode_pixels)."""
+    m = decode_metadata(bytes(buf))
+    return m, decode_pixels(buf, m, max_bands)
+
+
+def decode_pixels(buf: bytes, m: dict, max_bands: int | None = None) -> np.ndarray:
+    """Decode and stitch the (h, w, n_bands) image described by `m`.
 
     max_bands prunes the decode itself: planar files skip every chunk of a
     plane >= max_bands (band pruning pushed below the decode — a band-0
     consumer of a 3-plane file decompresses 1/3 of the bytes); chunky files
     are interleaved, so all chunks decode and the result is sliced.
     """
-    m = decode_metadata(bytes(buf))
     h, w, spp = m["height"], m["width"], m["spp"]
     n_bands = spp if max_bands is None else min(spp, max_bands)
-    kind = {T.SAMPLE_UNSIGNED: "u", T.SAMPLE_SIGNED: "i", T.SAMPLE_FLOAT: "f"}[m["formats"][0]]
     planar = m["planar"] == T.PLANAR_PLANAR
-    out = np.zeros((h, w, n_bands), dtype=np.dtype(f"{kind}{m['bits'][0] // 8}"))
+    out = np.zeros((h, w, n_bands), dtype=sample_dtype(m["formats"][0], m["bits"][0]))
     for c in pixel_chunks(m):
         if c["size_x"] == 0 or c["size_y"] == 0:
             continue
@@ -219,7 +220,7 @@ def _decode_full(buf: bytes, max_bands: int | None = None) -> tuple[dict, np.nda
             out[oy : oy + c["size_y"], ox : ox + c["size_x"], c["plane"] : c["plane"] + 1] = px
         else:
             out[oy : oy + c["size_y"], ox : ox + c["size_x"], :] = px[:, :, :n_bands]
-    return m, out
+    return out
 
 
 def _phash64(px: np.ndarray) -> int:
@@ -428,12 +429,15 @@ def full_decode_batches(res: int = DEFAULT_RES):
         for pdf in batches:
             out: list[tuple] = []
             for rec in pdf.itertuples(index=False):
-                meta_row = _meta_row(rec.bytes)
-                if meta_row["error"] is not None:
-                    out.append((rec.image_id, meta_row, []))
-                    continue
+                buf = bytes(rec.bytes)
                 try:
-                    m, px = _decode_full(rec.bytes, max_bands=1)
+                    m = decode_metadata(buf)
+                except TiffError as exc:
+                    out.append((rec.image_id, dict(_META_NULL, error=str(exc)), []))
+                    continue
+                meta_row = _meta_dict_to_row(m)
+                try:
+                    px = decode_pixels(buf, m, max_bands=1)
                     zon = _zonal_partials(m, px, res)
                 except TiffError as exc:
                     meta_row = dict(meta_row, error=str(exc))

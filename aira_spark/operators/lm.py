@@ -27,8 +27,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# the qualifying-word predicate, with each engine's absolute end-of-text
+# anchor: Java's $ would also accept 'abc\n', DuckDB's RE2 $ does not
+from .bpe import WORD_RE, WORD_RE_JAVA
+
 PPM = 1_000_000
-WORD_RE = "^[a-z]+$"
 
 def _bigrams(docs: DataFrame) -> DataFrame:
     """(doc_id, w1, w2) per adjacent pair of qualifying words, via pure JVM
@@ -42,7 +45,7 @@ def _bigrams(docs: DataFrame) -> DataFrame:
         "explode(arrays_zip(slice(ws, 1, size(ws) - 1), "
         "slice(ws, 2, size(ws) - 1))) AS z",
     ).selectExpr("doc_id", "z['0'] AS w1", "z['1'] AS w2")
-    return z.where(F.col("w1").rlike(WORD_RE) & F.col("w2").rlike(WORD_RE))
+    return z.where(F.col("w1").rlike(WORD_RE_JAVA) & F.col("w2").rlike(WORD_RE_JAVA))
 
 
 def train_bigram_lm(docs: DataFrame, max_bigrams: int | None = None) -> DataFrame:
@@ -120,7 +123,7 @@ bg AS (
     SELECT doc_id, unnest(list_zip(w[1:len(w) - 1], w[2:len(w)])) AS z
     FROM ws WHERE len(w) > 1
   )
-  WHERE regexp_matches(z[1], '^[a-z]+$') AND regexp_matches(z[2], '^[a-z]+$')
+  WHERE regexp_matches(z[1], '{WORD_RE}') AND regexp_matches(z[2], '{WORD_RE}')
 ),
 lm AS (
   SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS cnt FROM bg GROUP BY 1, 2

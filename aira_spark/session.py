@@ -4,13 +4,34 @@ Local-mode defaults that still reflect cluster-scale choices: AQE on (runtime
 coalescing + skew-join backstop), Arrow transfer for pandas UDFs, shuffle
 partition count sized to cores. On a real cluster only master/num-executors
 change (spark-submit --py-files, see bench.py).
+
+Python workers start from ``aira_spark.pydaemon``, not ``pyspark.daemon``.
+Spark puts its own archives (``pyspark.zip``, the py4j zip, the spark-core
+jar) first on the workers' path, and every task calls
+``importlib.invalidate_caches()``; before Python 3.12 (CPython gh-103200) that
+makes each cached ``zipimporter`` re-read its whole archive: ~300 ms of fixed
+cost in every ``mapInPandas``/``pandas_udf`` task on a 4-core x86 host. The daemon drops those
+archives when the same pyspark and py4j are installed unpacked. Remove it once
+the workers run Python >= 3.12.
 """
 
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark.sql import SparkSession
+
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _workers_import_engine() -> bool:
+    """Local workers start as `python -m <daemon module>` in this process's
+    working directory with its PYTHONPATH: name an engine module as the
+    daemon only when that path reaches this package."""
+    paths = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    paths += site.getsitepackages()
+    return any(p and os.path.realpath(p) == os.path.realpath(_ROOT) for p in paths)
 
 
 def get_spark(
@@ -51,6 +72,8 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
+    if _workers_import_engine():
+        b = b.config("spark.python.daemon.module", "aira_spark.pydaemon")
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()

@@ -1,4 +1,4 @@
-"""TIFF / BigTIFF structure decoder (pure numpy + stdlib).
+"""TIFF / BigTIFF structure decoder (pure stdlib).
 
 From-scratch reimplementation of the *semantics* of the reference decoder:
 
@@ -13,16 +13,15 @@ From-scratch reimplementation of the *semantics* of the reference decoder:
                                    zero-size clipping of overflow chunks)
 
 The whole buffer is in memory (it arrives as one Arrow binary cell), so the
-reference's seek() calls become numpy slicing over the same offsets.
+reference's seek() calls become struct.unpack_from over the same offsets.
 """
 
 from __future__ import annotations
 
 import re
+import struct
 from dataclasses import dataclass, field
 from typing import Any
-
-import numpy as np
 
 from . import tags as T
 
@@ -31,18 +30,22 @@ class TiffError(ValueError):
     """Decode failure; message mirrors the reference's error strings."""
 
 
-_CLASSIC_ENTRY_DT = [("tag", "u2"), ("dtype", "u2"), ("count", "u4"), ("value", "V4")]
-_BIG_ENTRY_DT = [("tag", "u2"), ("dtype", "u2"), ("count", "u8"), ("value", "V8")]
+# packed entry records (tag, dtype, count, value-or-pointer) per byte order
+_ENTRY = {
+    (bo, big): struct.Struct(bo + ("HHQ8s" if big else "HHI4s"))
+    for bo in "<>"
+    for big in (False, True)
+}
 
 _DATETIME_RE = re.compile(r"^\d{4}:\d{2}:\d{2} \d{2}:\d{2}:\d{2}$")
 
 # dtype-compat matrix of the sealed Decode trait (decoder.rs:435-513)
 _UNSIGNED_SCALAR = {
-    T.DTYPE_SHORT: "u2",
-    T.DTYPE_LONG: "u4",
-    T.DTYPE_IFD: "u4",
-    T.DTYPE_BIG_LONG: "u8",
-    T.DTYPE_BIG_IFD: "u8",
+    T.DTYPE_SHORT: "H",
+    T.DTYPE_LONG: "I",
+    T.DTYPE_IFD: "I",
+    T.DTYPE_BIG_LONG: "Q",
+    T.DTYPE_BIG_IFD: "Q",
 }
 
 
@@ -72,18 +75,16 @@ def read_header(buf: bytes) -> tuple[str, int, int]:
         bo = ">"
     else:
         raise TiffError(f"Invalid byte order signature {sig!r}")
-    version = int(np.frombuffer(buf, dtype=bo + "u2", count=1, offset=2)[0])
+    (version,) = struct.unpack_from(bo + "H", buf, 2)
     if version == 42:
-        first = int(np.frombuffer(buf, dtype=bo + "u4", count=1, offset=4)[0])
+        (first,) = struct.unpack_from(bo + "I", buf, 4)
         return bo, 42, first
     if version == 43:
         if len(buf) < 16:
             raise TiffError("Buffer too small for BigTIFF header")
-        offsize = int(np.frombuffer(buf, dtype=bo + "u2", count=1, offset=4)[0])
-        pad = int(np.frombuffer(buf, dtype=bo + "u2", count=1, offset=6)[0])
+        offsize, pad, first = struct.unpack_from(bo + "HHQ", buf, 4)
         if offsize != 8 or pad != 0:
             raise TiffError("Invalid BigTIFF offset size / padding")
-        first = int(np.frombuffer(buf, dtype=bo + "u8", count=1, offset=8)[0])
         return bo, 43, first
     raise TiffError(f"Unsupported TIFF version {version}")
 
@@ -91,47 +92,37 @@ def read_header(buf: bytes) -> tuple[str, int, int]:
 def _read_directory(buf: bytes, bo: str, big: bool, offset: int, index: int) -> tuple[Directory, int]:
     """Parses one IFD; returns (directory, next_offset)."""
     n = len(buf)
+    ptr_fmt = bo + ("Q" if big else "I")
     if big:
         if offset + 8 > n:
             raise TiffError("Directory offset out of bounds")
-        count = int(np.frombuffer(buf, dtype=bo + "u8", count=1, offset=offset)[0])
+        (count,) = struct.unpack_from(ptr_fmt, buf, offset)
         ent_off = offset + 8
-        ent_size = 20
-        dt = _BIG_ENTRY_DT
         inline_max = 8
     else:
         if offset + 2 > n:
             raise TiffError("Directory offset out of bounds")
-        count = int(np.frombuffer(buf, dtype=bo + "u2", count=1, offset=offset)[0])
+        (count,) = struct.unpack_from(bo + "H", buf, offset)
         ent_off = offset + 2
-        ent_size = 12
-        dt = _CLASSIC_ENTRY_DT
         inline_max = 4
-    end = ent_off + count * ent_size
+    rec = _ENTRY[bo, big]
+    end = ent_off + count * rec.size
     if end + (8 if big else 4) > n:
         raise TiffError("Directory entries out of bounds")
 
-    # vectorized parse of the packed entry array (SURVEY.md S3)
-    recs = np.frombuffer(buf, dtype=np.dtype(dt).newbyteorder(bo), count=count, offset=ent_off)
-    next_off = int(
-        np.frombuffer(buf, dtype=bo + ("u8" if big else "u4"), count=1, offset=end)[0]
-    )
+    # one struct pass over the packed entry array (SURVEY.md S3)
+    (next_off,) = struct.unpack_from(ptr_fmt, buf, end)
 
     entries: list[RawEntry] = []
-    ptr_dt = bo + ("u8" if big else "u4")
-    for rec in recs:
-        tag = int(rec["tag"])
-        dtype = int(rec["dtype"])
-        cnt = int(rec["count"])
+    for tag, dtype, cnt, vbytes in rec.iter_unpack(memoryview(buf)[ent_off:end]):
         size = T.DTYPE_SIZE.get(dtype)
         if size is None:
             raise TiffError(f"Unknown entry dtype {dtype}")
         nbytes = size * cnt
-        vbytes = rec["value"].tobytes()
         if nbytes <= inline_max:
             raw = vbytes[:nbytes]
         else:
-            ptr = int(np.frombuffer(vbytes, dtype=ptr_dt, count=1)[0])
+            (ptr,) = struct.unpack(ptr_fmt, vbytes)
             if ptr + nbytes > n:
                 raise TiffError(f"Entry value for tag {tag} out of bounds")
             raw = bytes(buf[ptr : ptr + nbytes])
@@ -159,29 +150,29 @@ def walk_directories(buf: bytes, max_pages: int = 1024) -> tuple[str, int, list[
 def _decode_scalar_u32(e: RawEntry, bo: str) -> int:
     # 'decode! as u32': Short widened, Long exact (metadata.rs:428-433)
     if e.dtype == T.DTYPE_SHORT:
-        return int(np.frombuffer(e.raw, dtype=bo + "u2", count=1)[0])
+        return struct.unpack_from(bo + "H", e.raw)[0]
     if e.dtype == T.DTYPE_LONG:
-        return int(np.frombuffer(e.raw, dtype=bo + "u4", count=1)[0])
+        return struct.unpack_from(bo + "I", e.raw)[0]
     raise TiffError(f"Unexpected dtype {e.dtype} for tag {e.tag}")
 
 
 def _decode_scalar_u16(e: RawEntry, bo: str) -> int:
     if e.dtype != T.DTYPE_SHORT:
         raise TiffError(f"Unexpected dtype {e.dtype} for tag {e.tag}")
-    return int(np.frombuffer(e.raw, dtype=bo + "u2", count=1)[0])
+    return struct.unpack_from(bo + "H", e.raw)[0]
 
 
 def _decode_only_u32(e: RawEntry, bo: str) -> int:
     # 'decode! into u32': Long only (NEW_SUBFILE_TYPE)
     if e.dtype != T.DTYPE_LONG:
         raise TiffError(f"Unexpected dtype {e.dtype} for tag {e.tag}")
-    return int(np.frombuffer(e.raw, dtype=bo + "u4", count=1)[0])
+    return struct.unpack_from(bo + "I", e.raw)[0]
 
 
 def _decode_vec_u16(e: RawEntry, bo: str) -> list[int]:
     if e.dtype != T.DTYPE_SHORT:
         raise TiffError(f"Unexpected dtype {e.dtype} for tag {e.tag}")
-    return np.frombuffer(e.raw, dtype=bo + "u2", count=e.count).tolist()
+    return list(struct.unpack_from(f"{bo}{e.count}H", e.raw))
 
 
 def _decode_vec_u64(e: RawEntry, bo: str) -> list[int]:
@@ -189,14 +180,13 @@ def _decode_vec_u64(e: RawEntry, bo: str) -> list[int]:
     kind = _UNSIGNED_SCALAR.get(e.dtype)
     if kind is None:
         raise TiffError(f"Unexpected dtype {e.dtype} for tag {e.tag}")
-    return np.frombuffer(e.raw, dtype=bo + kind, count=e.count).astype(np.uint64).tolist()
+    return list(struct.unpack_from(f"{bo}{e.count}{kind}", e.raw))
 
 
 def _decode_rational(e: RawEntry, bo: str) -> tuple[int, int]:
     if e.dtype != T.DTYPE_RATIONAL:
         raise TiffError(f"Unexpected dtype {e.dtype} for tag {e.tag}")
-    v = np.frombuffer(e.raw, dtype=bo + "u4", count=2)
-    return int(v[0]), int(v[1])
+    return struct.unpack_from(bo + "II", e.raw)
 
 
 def _decode_string(e: RawEntry, bo: str) -> str:
@@ -215,33 +205,35 @@ def _decode_string(e: RawEntry, bo: str) -> str:
         raise TiffError(f"Invalid UTF-8 string: {exc}") from exc
 
 
+_SIMPLE_FMT = {
+    T.DTYPE_BYTE: "B",
+    T.DTYPE_UNDEFINED: "B",
+    T.DTYPE_SBYTE: "b",
+    T.DTYPE_SHORT: "H",
+    T.DTYPE_LONG: "I",
+    T.DTYPE_IFD: "I",
+    T.DTYPE_BIG_LONG: "Q",
+    T.DTYPE_BIG_IFD: "Q",
+    T.DTYPE_SSHORT: "h",
+    T.DTYPE_SLONG: "i",
+    T.DTYPE_BIG_SLONG: "q",
+    T.DTYPE_FLOAT: "f",
+    T.DTYPE_DOUBLE: "d",
+}
+
+
 def entry_value(dtype: int, count: int, raw: bytes, bo: str) -> Any:
     """Materializes a dynamic entry value (SURVEY.md S6; entry.rs:42-84)."""
     if dtype == T.DTYPE_ASCII:
         e = RawEntry(0, dtype, count, raw)
         return _decode_string(e, bo)
-    if dtype in (T.DTYPE_BYTE, T.DTYPE_UNDEFINED):
-        return np.frombuffer(raw, dtype="u1", count=count).tolist()
-    if dtype == T.DTYPE_SBYTE:
-        return np.frombuffer(raw, dtype="i1", count=count).tolist()
-    simple = {
-        T.DTYPE_SHORT: "u2",
-        T.DTYPE_LONG: "u4",
-        T.DTYPE_IFD: "u4",
-        T.DTYPE_BIG_LONG: "u8",
-        T.DTYPE_BIG_IFD: "u8",
-        T.DTYPE_SSHORT: "i2",
-        T.DTYPE_SLONG: "i4",
-        T.DTYPE_BIG_SLONG: "i8",
-        T.DTYPE_FLOAT: "f4",
-        T.DTYPE_DOUBLE: "f8",
-    }.get(dtype)
+    simple = _SIMPLE_FMT.get(dtype)
     if simple is not None:
-        return np.frombuffer(raw, dtype=bo + simple, count=count).tolist()
+        return list(struct.unpack_from(f"{bo}{count}{simple}", raw))
     if dtype in (T.DTYPE_RATIONAL, T.DTYPE_SRATIONAL):
-        kind = "u4" if dtype == T.DTYPE_RATIONAL else "i4"
-        v = np.frombuffer(raw, dtype=bo + kind, count=2 * count)
-        return [(int(v[2 * i]), int(v[2 * i + 1])) for i in range(count)]
+        kind = "I" if dtype == T.DTYPE_RATIONAL else "i"
+        v = struct.unpack_from(f"{bo}{2 * count}{kind}", raw)
+        return list(zip(v[::2], v[1::2]))
     raise TiffError(f"Unknown entry dtype {dtype}")
 
 

@@ -75,7 +75,11 @@ def decompress(data: bytes, compression: int) -> bytes:
     if compression == T.COMPRESSION_PACKBITS:
         return unpackbits(data)
     if compression in (T.COMPRESSION_DEFLATE, T.COMPRESSION_LEGACY_DEFLATE):
-        return zlib.decompress(data)
+        try:
+            return zlib.decompress(data)
+        except zlib.error as exc:
+            # a truncated or corrupt stream is a dead letter, not a task crash
+            raise TiffError(f"Invalid deflate stream: {exc}") from exc
     raise TiffError(f"Unsupported compression {compression}")
 
 
@@ -89,7 +93,7 @@ def compress(data: bytes, compression: int) -> bytes:
     raise TiffError(f"Unsupported compression {compression}")
 
 
-def _sample_dtype(fmt: int, bits: int) -> np.dtype:
+def sample_dtype(fmt: int, bits: int) -> np.dtype:
     kind = T.SAMPLE_DTYPE_KIND.get((fmt, bits))
     if kind is None:
         raise TiffError(f"Cannot decode samples with format {fmt}, {bits} bits")
@@ -158,7 +162,7 @@ def decode_chunk(
     if planar:
         plane = chunk_idx // meta["expected_chunks"]
         fmt0, bits0 = meta["formats"][plane], meta["bits"][plane]
-    dtype = _sample_dtype(fmt0, bits0)
+    dtype = sample_dtype(fmt0, bits0)
 
     raw = decompress(payload, meta["compression"])
     if meta["layout_kind"] == "tiles":

@@ -58,3 +58,22 @@ def test_quality_signal_orders_garbled_below_natural(spark):
     got = {r["doc_id"]: r["mean_ppm"]
            for r in lm_scores(_docs(spark, base + [garbled])).collect()}
     assert min(got[i] for i in range(3)) > got[3]
+
+
+def test_trailing_newline_word_does_not_qualify(spark):
+    # Java's $ matches before a trailing '\n', RE2's (the DuckDB oracle) does
+    # not: 'abc\n' must break adjacency on Spark exactly as in the oracle
+    import duckdb
+
+    from aira_spark.operators.lm import oracle_lm_sql
+
+    texts = ["abc\n abc", "x abc\n y", "a b"]
+    docs = _docs(spark, texts)
+    lm = {(r["w1"], r["w2"]) for r in train_bigram_lm(docs).collect()}
+    assert lm == {("a", "b")}
+    got = sorted(tuple(r) for r in lm_scores(docs).collect())
+    assert got == [(0, 0, 0, 0), (1, 0, 0, 0), (2, 1, PPM, PPM)]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", list(enumerate(texts)))
+    assert sorted(con.execute(oracle_lm_sql()).fetchall()) == got
