@@ -58,8 +58,7 @@ def geoinfo(argv: list[str]) -> int:
     """Georeference summary per file/page: CRS geokeys, geotransform,
     world-space footprint (the engine-side GeoTIFF semantics the reference
     only carries as raw tags)."""
-    from .tiff import tags as T
-    from .tiff.meta import TiffError, decode_all_pages, entry_value, parse_geokeys
+    from .tiff.meta import TiffError, decode_all_pages, parse_geokeys
 
     ap = argparse.ArgumentParser(prog="aira_spark geoinfo")
     ap.add_argument("files", nargs="+")
@@ -87,23 +86,18 @@ def geoinfo(argv: list[str]) -> int:
             try:
                 gk = parse_geokeys(m)
                 rec["geokeys"] = gk
-                scale = m["custom"].get(T.MODEL_PIXEL_SCALE)
-                tie = m["custom"].get(T.MODEL_TIEPOINT)
-                if scale is not None and tie is not None:
-                    sv = entry_value(*scale, m["byteorder"])
-                    tv = entry_value(*tie, m["byteorder"])
-                    if len(sv) < 2 or len(tv) < 5:
-                        raise TiffError("geotransform tags have too few values")
-                    x0 = tv[3] - tv[0] * sv[0]
-                    y1 = tv[4] + tv[1] * sv[1]
-                    rec["scale"] = [sv[0], sv[1]]
-                    rec["footprint"] = [
-                        x0, y1 - m["height"] * sv[1], x0 + m["width"] * sv[0], y1,
-                    ]
-            except (TiffError, TypeError) as exc:
-                # malformed geo tags: degrade per page, keep going
+            except TiffError as exc:
+                # malformed geokeys: degrade per page, keep going
                 rec["error"] = str(exc)
                 status = 1
+            if m["geo"] is not None:
+                sv, tv = m["geo"]
+                x0 = tv[3] - tv[0] * sv[0]
+                y1 = tv[4] + tv[1] * sv[1]
+                rec["scale"] = [sv[0], sv[1]]
+                rec["footprint"] = [
+                    x0, y1 - m["height"] * sv[1], x0 + m["width"] * sv[0], y1,
+                ]
             if args.json:
                 print(json.dumps(rec))
             else:

@@ -157,17 +157,13 @@ def cell_parent(cell: Column, steps: int = 1) -> Column:
     )
 
 
-def k_ring(cell: Column, k: int, res: int = DEFAULT_RES) -> Column:
+def k_ring(cell: Column, k: int) -> Column:
     """array<long> of cells within Chebyshev distance k; pure sequence+transform.
 
     The ring is computed at the CELL'S OWN encoded resolution (extracted
-    per row, exactly like the numpy twin np_k_ring) — the `res` parameter
-    is retained for API compatibility but no longer trusted: a caller
-    passing a res that disagreed with the cells' actual resolution
-    previously got valid-looking but wrong ids (coordinates clamped to the
-    wrong grid, re-packed with the wrong res bits) with no error. Deriving
-    from the cell also makes mixed-resolution columns (compact covers)
-    correct. All ops stay codegen-friendly built-ins."""
+    per row, exactly like the numpy twin np_k_ring), so mixed-resolution
+    columns (compact covers) are correct and no caller-supplied resolution
+    can disagree with the cells. All ops stay codegen-friendly built-ins."""
     cres = cell_res(cell)
     # python-api shiftleft() only takes an int literal for numBits;
     # call_function passes the per-row res column through to the SQL form

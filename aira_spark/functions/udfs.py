@@ -17,7 +17,7 @@ from pyspark.sql import types as Ty
 from pyspark.sql.pandas.functions import pandas_udf
 
 from ..tiff import tags as T
-from ..tiff.meta import TiffError, decode_metadata, entry_value, pixel_chunks
+from ..tiff.meta import TiffError, decode_metadata, pixel_chunks
 from ..tiff.pixels import decode_chunk, psnr, sample_dtype
 from .cells import DEFAULT_RES, np_cell_from_xy
 
@@ -146,12 +146,8 @@ def _meta_dict_to_row(m: dict) -> dict:
         "tie_y": None,
         "custom": m["custom"],
     }
-    bo = m["byteorder"]
-    scale = m["custom"].get(T.MODEL_PIXEL_SCALE)
-    tie = m["custom"].get(T.MODEL_TIEPOINT)
-    if scale is not None and tie is not None:
-        sv = entry_value(*scale, bo)
-        tv = entry_value(*tie, bo)
+    if m["geo"] is not None:
+        sv, tv = m["geo"]
         row.update(scale_x=sv[0], scale_y=sv[1], tie_i=tv[0], tie_j=tv[1],
                    tie_x=tv[3], tie_y=tv[4])
     return row
@@ -192,6 +188,21 @@ def _decode_full(buf: bytes, max_bands: int | None = None) -> tuple[dict, np.nda
     """Decode the metadata, then the pixels (see decode_pixels)."""
     m = decode_metadata(bytes(buf))
     return m, decode_pixels(buf, m, max_bands)
+
+
+def decoded_images(pdf: pd.DataFrame, max_bands: int | None = None):
+    """Yield (rec, m, px) for every row of a mapInPandas batch whose `bytes`
+    decode: metadata once, then the pixels (see decode_pixels). A row that
+    raises TiffError drops out — the dead-letter contract (SURVEY.md S8/K3)
+    every raster UDF shares; a bad image never fails the task."""
+    for rec in pdf.itertuples(index=False):
+        try:
+            buf = bytes(rec.bytes)
+            m = decode_metadata(buf)
+            px = decode_pixels(buf, m, max_bands)
+        except TiffError:
+            continue
+        yield rec, m, px
 
 
 def decode_pixels(buf: bytes, m: dict, max_bands: int | None = None) -> np.ndarray:
@@ -303,12 +314,9 @@ def pixel_world_coords(m: dict, h: int, w: int):
     the half-pixel-center + tiepoint convention — the cell-zonal path and
     the exact-polygon path must agree on pixel world coordinates, so any
     future correction lands in both by construction."""
-    scale = m["custom"].get(T.MODEL_PIXEL_SCALE)
-    tie = m["custom"].get(T.MODEL_TIEPOINT)
-    if scale is None or tie is None:
+    if m["geo"] is None:
         return None, None, None, None
-    sv = entry_value(*scale, m["byteorder"])
-    tv = entry_value(*tie, m["byteorder"])
+    sv, tv = m["geo"]
     xs = tv[3] + (np.arange(w, dtype=np.float64) + 0.5 - tv[0]) * sv[0]
     ys = tv[4] - (np.arange(h, dtype=np.float64) + 0.5 - tv[1]) * sv[1]
     return xs, ys, sv, tv
@@ -380,12 +388,7 @@ def zonal_pixel_batches(res: int = DEFAULT_RES):
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out: list[tuple] = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    # band-0 consumer: planar plane>0 chunks are never decoded
-                    m, px = _decode_full(rec.bytes, max_bands=1)
-                except TiffError:
-                    continue
+            for rec, m, px in decoded_images(pdf, max_bands=1):
                 out.extend(
                     (rec.image_id, *p) for p in _zonal_partials(m, px, res)
                 )

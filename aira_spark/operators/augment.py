@@ -26,9 +26,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..functions.udfs import _decode_full
+from ..functions.udfs import _decode_full, decoded_images
 from ..tiff.encode import write_tiff
-from ..tiff.meta import TiffError
 
 # op -> band-0 transform (numpy view semantics; all pure index permutations)
 AUG_OPS = {
@@ -58,11 +57,7 @@ def augment_stats(
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    _, px = _decode_full(bytes(rec.bytes), max_bands=1)
-                except TiffError:
-                    continue
+            for rec, _, px in decoded_images(pdf, max_bands=1):
                 band0 = px[:, :, 0]
                 for op in ops:
                     out = np.ascontiguousarray(AUG_OPS[op](band0))

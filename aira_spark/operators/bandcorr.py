@@ -62,8 +62,7 @@ def band_correlation(images: DataFrame) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from ..functions.udfs import _decode_full
-    from ..tiff.meta import TiffError
+    from ..functions.udfs import decoded_images
 
     cols = [
         "image_id", "band_x", "band_y", "n_px",
@@ -73,11 +72,7 @@ def band_correlation(images: DataFrame) -> DataFrame:
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out: list[tuple] = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    m, px = _decode_full(rec.bytes)
-                except TiffError:
-                    continue
+            for rec, _, px in decoded_images(pdf):
                 spp = px.shape[2]
                 if spp < 2:
                     continue

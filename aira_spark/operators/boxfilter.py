@@ -42,8 +42,7 @@ def box_filter_census(images: DataFrame, radius: int = 3) -> DataFrame:
 
     import pandas as pd
 
-    from ..functions.udfs import _decode_full
-    from ..tiff.meta import TiffError
+    from ..functions.udfs import decoded_images
 
     cols = ["image_id", "n_int", "sum_box", "min_box", "max_box", "checksum"]
     R = radius
@@ -51,11 +50,7 @@ def box_filter_census(images: DataFrame, radius: int = 3) -> DataFrame:
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out: list[tuple] = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    m, px = _decode_full(rec.bytes, max_bands=1)
-                except TiffError:
-                    continue
+            for rec, _, px in decoded_images(pdf, max_bands=1):
                 a = px[:, :, 0].astype(np.int64)
                 h, w = a.shape
                 if h < 2 * R + 1 or w < 2 * R + 1:

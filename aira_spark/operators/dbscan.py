@@ -44,7 +44,7 @@ def _neighborhood_counts(points: DataFrame, res: int) -> DataFrame:
         .agg(F.count("*").cast("long").alias("cnt"))
     )
     scattered = counts.select(
-        "cell", "cnt", F.explode(k_ring(F.col("cell"), 1, res)).alias("tgt")
+        "cell", "cnt", F.explode(k_ring(F.col("cell"), 1)).alias("tgt")
     ).select(
         F.col("tgt").alias("cell2"),
         "cnt",
@@ -111,7 +111,7 @@ def grid_dbscan(points: DataFrame, res: int, min_pts: int) -> DataFrame:
 
     # border: non-core occupied cell adjacent to >= 1 core -> MIN core label
     reach = core_lab.select(
-        F.explode(k_ring(F.col("cell"), 1, res)).alias("cell"),
+        F.explode(k_ring(F.col("cell"), 1)).alias("cell"),
         "cluster",
     ).groupBy("cell").agg(F.min("cluster").alias("bcluster"))
     rest_lab = rest.join(reach, "cell", "left").selectExpr(

@@ -31,19 +31,14 @@ def luma_census(images: DataFrame) -> DataFrame:
 
     import pandas as pd
 
-    from ..functions.udfs import _decode_full
-    from ..tiff.meta import TiffError
+    from ..functions.udfs import decoded_images
 
     cols = ["image_id", "n_px", "sum_y", "min_y", "max_y", "checksum"]
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out: list[tuple] = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    m, px = _decode_full(rec.bytes, max_bands=3)
-                except TiffError:
-                    continue
+            for rec, _, px in decoded_images(pdf, max_bands=3):
                 if px.shape[2] < 3:
                     continue
                 b = px.astype(np.int64)

@@ -62,19 +62,14 @@ def image_moments(images: DataFrame) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from ..functions.udfs import _decode_full
-    from ..tiff.meta import TiffError
+    from ..functions.udfs import decoded_images
 
     cols = ["image_id", "band", "m00", "m10", "m01", "m20", "m02", "m11"]
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out: list[tuple] = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    m, px = _decode_full(rec.bytes)
-                except TiffError:
-                    continue
+            for rec, _, px in decoded_images(pdf):
                 h, w = px.shape[0], px.shape[1]
                 r = np.arange(h, dtype=np.int64)[:, None]
                 c = np.arange(w, dtype=np.int64)[None, :]

@@ -31,7 +31,7 @@ def dilate_cover(
     """Buffer the cover by k rings: distinct union of every cell's clamped
     k-ring. Returns a single `cell` column (a SET of cells)."""
     return (
-        cover.select(F.explode(k_ring(F.col(cell_col), k, res)).alias("cell"))
+        cover.select(F.explode(k_ring(F.col(cell_col), k)).alias("cell"))
         .distinct()
     )
 
@@ -52,7 +52,7 @@ def erode_cover(
     count at c is exactly |ring(c) ∩ cover|."""
     base = cover.select(F.col(cell_col).alias("cell")).distinct()
     support = (
-        base.select(F.explode(k_ring(F.col("cell"), k, res)).alias("cell"))
+        base.select(F.explode(k_ring(F.col("cell"), k)).alias("cell"))
         .groupBy("cell")
         .agg(F.count("*").cast("long").alias("witnesses"))
     )

@@ -36,8 +36,7 @@ def mosaic_cell_values(
     Subcell (pr, pc) indexes the PATCH x PATCH grid inside the cell, row 0 at
     the cell's SOUTH edge (consistent with the grid's y-up indexing).
     """
-    from ..functions.udfs import _decode_full, pixel_cell_groups
-    from ..tiff.meta import TiffError
+    from ..functions.udfs import decoded_images, pixel_cell_groups
 
     fine_res = res + patch_bits
 
@@ -48,11 +47,7 @@ def mosaic_cell_values(
             cols: dict[str, list[np.ndarray]] = {
                 "cell": [], "pr": [], "pc": [], "val": []
             }
-            for rec in pdf.itertuples(index=False):
-                try:
-                    m, px = _decode_full(rec.bytes, max_bands=1)
-                except TiffError:
-                    continue
+            for _, m, px in decoded_images(pdf, max_bands=1):
                 groups = pixel_cell_groups(m, px, fine_res)
                 if groups is None:
                     continue
@@ -139,8 +134,7 @@ def mosaic_blend_values(
     pixels never shuffle, only (cell, pr, pc, wv, w) integer rows.
     Budget: wv <= 255 * (1 + max_dim/2) * px_per_cell — mid-int64 at any
     realistic tile size."""
-    from ..functions.udfs import _decode_full, pixel_cell_groups
-    from ..tiff.meta import TiffError
+    from ..functions.udfs import decoded_images, pixel_cell_groups
 
     fine_res = res + patch_bits
 
@@ -151,11 +145,7 @@ def mosaic_blend_values(
             cols: dict[str, list[np.ndarray]] = {
                 "cell": [], "pr": [], "pc": [], "wv": [], "w": []
             }
-            for rec in pdf.itertuples(index=False):
-                try:
-                    m, px = _decode_full(rec.bytes, max_bands=1)
-                except TiffError:
-                    continue
+            for _, m, px in decoded_images(pdf, max_bands=1):
                 groups = pixel_cell_groups(m, px, fine_res)
                 if groups is None:
                     continue

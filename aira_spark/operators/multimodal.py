@@ -23,10 +23,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as Ty
 
-from ..functions.udfs import _decode_full
+from ..functions.udfs import decode_pixels, decoded_images
 from ..jpegio import JpegError
 from ..pngio import PngError
-from ..tiff.meta import TiffError
+from ..tiff.meta import TiffError, decode_metadata
 
 FEATURE_SCHEMA = Ty.StructType(
     [
@@ -72,8 +72,7 @@ def decode_image(fmt: str, payload: bytes) -> np.ndarray:
     video_roundtrip_stats), not image formats, so they never dispatch
     here; anything unrecognized falls through to the loud error below."""
     if fmt.startswith("tiff"):
-        _, px = _decode_full(payload)
-        return px
+        return decode_pixels(payload, decode_metadata(payload))
     if fmt.startswith("png"):
         from ..pngio import decode_png
 
@@ -144,26 +143,16 @@ def resize_images(images: DataFrame, th: int, tw: int) -> DataFrame:
     geotransform rescaled so the footprint is preserved. Returns
     (image_id, bytes) — a derived images table (training-data thumbnailing).
     """
-    from ..tiff import tags as T
     from ..tiff.encode import write_tiff
-    from ..tiff.meta import entry_value
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for rec in pdf.itertuples(index=False):
-                buf = bytes(rec.bytes)
-                try:
-                    m, px = _decode_full(buf)
-                except TiffError:
-                    continue
+            for rec, m, px in decoded_images(pdf):
                 small = _area_pool_floor(px, th, tw)
                 geo = None
-                scale = m["custom"].get(T.MODEL_PIXEL_SCALE)
-                tie = m["custom"].get(T.MODEL_TIEPOINT)
-                if scale is not None and tie is not None:
-                    sv = entry_value(*scale, m["byteorder"])
-                    tv = entry_value(*tie, m["byteorder"])
+                if m["geo"] is not None:
+                    sv, tv = m["geo"]
                     # re-anchor the tiepoint at pixel (0, 0): the source tie
                     # may reference pixel (tie_i, tie_j) != (0, 0)
                     tx0 = tv[3] - tv[0] * sv[0]
@@ -774,11 +763,7 @@ def patchify(images: DataFrame, patch: int = 16) -> DataFrame:
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out: list[tuple] = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    _, px = _decode_full(rec.bytes, max_bands=1)
-                except TiffError:
-                    continue
+            for rec, _, px in decoded_images(pdf, max_bands=1):
                 a = px[:, :, 0].astype(np.int64)
                 h, w = a.shape
                 for pr in range((h + patch - 1) // patch):
@@ -817,20 +802,14 @@ def transcode_stats(images: "DataFrame") -> "DataFrame":
     import numpy as np
     import pandas as pd
 
-    from ..functions.udfs import _decode_full
     from ..pngio import write_png
-    from ..tiff.meta import TiffError
 
     cols = ["image_id", "out_ch", "out_w", "out_h", "sum_px", "wsum"]
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    _, px = _decode_full(rec.bytes)
-                except TiffError:
-                    continue
+            for rec, _, px in decoded_images(pdf):
                 # synthetic values are exact 0..255 in every variant dtype
                 a8 = px.astype(np.uint8)
                 h, w, ch = a8.shape

@@ -29,27 +29,18 @@ from .chunks import with_meta_pages
 
 
 def _pyramid_batches(levels: int):
-    from ..functions.udfs import _decode_full
-    from ..tiff import tags as T
+    from ..functions.udfs import decoded_images
     from ..tiff.encode import concat_tiff_pages, write_tiff
-    from ..tiff.meta import TiffError, decode_metadata, entry_value, read_header
+    from ..tiff.meta import read_header
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out: list[tuple] = []
-            for rec in pdf.itertuples(index=False):
+            for rec, m, px in decoded_images(pdf):
                 buf = bytes(rec.bytes)
-                try:
-                    m = decode_metadata(buf)
-                    _, px = _decode_full(buf)
-                except TiffError:
-                    continue
-                scale = m["custom"].get(T.MODEL_PIXEL_SCALE)
-                tie = m["custom"].get(T.MODEL_TIEPOINT)
                 geo_base = None
-                if scale is not None and tie is not None:
-                    sv = entry_value(*scale, m["byteorder"])
-                    tv = entry_value(*tie, m["byteorder"])
+                if m["geo"] is not None:
+                    sv, tv = m["geo"]
                     # re-anchor at pixel (0, 0) (source tie may be elsewhere)
                     geo_base = (
                         sv[0], sv[1],

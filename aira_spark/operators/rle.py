@@ -42,19 +42,14 @@ def rle_census(images: DataFrame) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from ..functions.udfs import _decode_full
-    from ..tiff.meta import TiffError
+    from ..functions.udfs import decoded_images
 
     cols = ["image_id", "band", "n_px", "n_runs", "max_run", "n_chunks"]
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out: list[tuple] = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    _, px = _decode_full(rec.bytes)
-                except TiffError:
-                    continue
+            for rec, _, px in decoded_images(pdf):
                 for s in range(px.shape[2]):
                     q = (px[:, :, s].astype(np.int64) >> 6).ravel()
                     n = q.size

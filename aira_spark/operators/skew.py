@@ -1,4 +1,4 @@
-"""Skew handling: salted repartitioning on hot cells (north rule).
+"""Skew handling: salting hot cells for skewed joins (north rule).
 
 AQE's skew-join splitting only rebalances *join* partitions; UDF-heavy stages
 partitioned by cell still hotspot when one cell holds a disproportionate share
@@ -46,17 +46,6 @@ def salt_column(df: DataFrame, key: str, hot: DataFrame, n_salt: int = 16,
         .otherwise(F.lit(0))
         .cast("int"),
     ).drop("_is_hot")
-
-
-def salted_repartition(df: DataFrame, key: str, n_salt: int = 16,
-                       threshold_frac: float = 0.01, uid: str | None = None,
-                       num_partitions: int | None = None) -> DataFrame:
-    """Repartition by (key, salt) so hot keys fan out over n_salt partitions."""
-    hot = hot_keys(df, key, threshold_frac)
-    salted = salt_column(df, key, hot, n_salt, uid)
-    if num_partitions:
-        return salted.repartition(num_partitions, F.col(key), F.col("salt"))
-    return salted.repartition(F.col(key), F.col("salt"))
 
 
 def replicate_for_salted_join(small: DataFrame, n_salt: int = 16) -> DataFrame:

@@ -42,8 +42,7 @@ def template_match(images: DataFrame) -> DataFrame:
 
     import pandas as pd
 
-    from ..functions.udfs import _decode_full
-    from ..tiff.meta import TiffError
+    from ..functions.udfs import decoded_images
 
     T = template_4x4()
     cols = ["image_id", "n_off", "min_ssd", "best_r", "best_c", "sum_ssd"]
@@ -51,11 +50,7 @@ def template_match(images: DataFrame) -> DataFrame:
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out: list[tuple] = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    m, px = _decode_full(rec.bytes, max_bands=1)
-                except TiffError:
-                    continue
+            for rec, _, px in decoded_images(pdf, max_bands=1):
                 a = px[:, :, 0].astype(np.int64)
                 h, w = a.shape
                 if h < TH or w < TW:

@@ -67,24 +67,15 @@ def warp_cell_values(
     """(tx, ty, val): MAX-composited band-0 value per target-grid pixel,
     every scene inverse-map resampled onto the common (X0, Y0, tsx, tsy)
     grid. tx/ty index target pixels east/north of the grid origin."""
-    from ..functions.udfs import _decode_full
-    from ..tiff import tags as T
-    from ..tiff.meta import TiffError, entry_value
+    from ..functions.udfs import decoded_images
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             cols: dict[str, list[np.ndarray]] = {"tx": [], "ty": [], "val": []}
-            for rec in pdf.itertuples(index=False):
-                try:
-                    m, px = _decode_full(rec.bytes, max_bands=1)
-                except TiffError:
+            for _, m, px in decoded_images(pdf, max_bands=1):
+                if m["geo"] is None:
                     continue
-                scale = m["custom"].get(T.MODEL_PIXEL_SCALE)
-                tie = m["custom"].get(T.MODEL_TIEPOINT)
-                if scale is None or tie is None:
-                    continue
-                sv = entry_value(*scale, m["byteorder"])
-                tv = entry_value(*tie, m["byteorder"])
+                sv, tv = m["geo"]
                 h, w = px.shape[:2]
                 # left/bottom edges and top edge from the decoded transform
                 # (tv[0]/tv[1] are the tie pixel indices — 0 for this writer,

@@ -41,19 +41,14 @@ def wht_block_features(images: DataFrame, max_uv: int = 4) -> DataFrame:
 
     import pandas as pd
 
-    from ..functions.udfs import _decode_full
-    from ..tiff.meta import TiffError
+    from ..functions.udfs import decoded_images
 
     cols = ["image_id", "bx", "by", "u", "v", "coef"]
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out: list[tuple] = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    m, px = _decode_full(rec.bytes, max_bands=1)
-                except TiffError:
-                    continue
+            for rec, _, px in decoded_images(pdf, max_bands=1):
                 a = px[:, :, 0].astype(np.int64)
                 nby, nbx = a.shape[0] // BLOCK, a.shape[1] // BLOCK
                 if not nby or not nbx:

@@ -45,8 +45,7 @@ def zonal_stats_bands(images: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     import pandas as pd
     from collections.abc import Iterator
 
-    from ..functions.udfs import _decode_full, _zonal_partials_bands
-    from ..tiff.meta import TiffError
+    from ..functions.udfs import _zonal_partials_bands, decoded_images
 
     # no image_id in the partials: the reduce groups on (cell, band) only, so
     # shipping the id across Arrow would be dead weight
@@ -57,11 +56,7 @@ def zonal_stats_bands(images: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out: list[tuple] = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    m, px = _decode_full(rec.bytes)
-                except TiffError:
-                    continue
+            for _, m, px in decoded_images(pdf):
                 out.extend(_zonal_partials_bands(m, px, res))
             yield pd.DataFrame(
                 out,
@@ -98,8 +93,7 @@ def band_index_stats(
 
     import numpy as np
 
-    from ..functions.udfs import _decode_full, pixel_cell_groups, reduce_by_cell
-    from ..tiff.meta import TiffError
+    from ..functions.udfs import decoded_images, pixel_cell_groups, reduce_by_cell
 
     schema = "cell long, px_cnt long, px_sum long, px_min long, px_max long"
     need = max(b0, b1) + 1
@@ -107,12 +101,7 @@ def band_index_stats(
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out: list[tuple] = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    # prune planar decode to the bands the index reads
-                    m, px = _decode_full(rec.bytes, max_bands=need)
-                except TiffError:
-                    continue
+            for _, m, px in decoded_images(pdf, max_bands=need):
                 if px.shape[2] < need:
                     continue
                 groups = pixel_cell_groups(m, px, res)
@@ -223,13 +212,12 @@ def zonal_exact_by_polygon(
     schema = "poly_id string, n_px long, sum_px long, min_px long, max_px long"
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.udfs import _decode_full, pixel_world_coords
-        from ..tiff.meta import TiffError
+        from ..functions.udfs import decoded_images, pixel_world_coords
 
         polys_np = None  # identical in every row (broadcast single-row side)
         for pdf in batches:
             out: list[tuple] = []
-            for rec in pdf.itertuples(index=False):
+            for rec, mm, px in decoded_images(pdf, max_bands=1):
                 if polys_np is None:
                     polys_np = []
                     for p in rec.polys:
@@ -243,11 +231,6 @@ def zonal_exact_by_polygon(
                             max(ax.max(), bx.max()), max(ay.max(), by.max()),
                         )
                         polys_np.append((p["poly_id"], ax, ay, bx, by, bb))
-                try:
-                    # band-0 consumer: prune planar decode to the first plane
-                    mm, px = _decode_full(bytes(rec.bytes), max_bands=1)
-                except TiffError:
-                    continue
                 h, w = px.shape[:2]
                 xs, ys, sv, _tv = pixel_world_coords(mm, h, w)
                 if xs is None:
@@ -335,19 +318,14 @@ def band_histogram(images: DataFrame) -> DataFrame:
 
     import numpy as np
 
-    from ..functions.udfs import _decode_full
-    from ..tiff.meta import TiffError
+    from ..functions.udfs import decoded_images
 
     cols = ["image_id", "band", "value", "cnt"]
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out: list[tuple] = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    m, px = _decode_full(rec.bytes)
-                except TiffError:
-                    continue
+            for rec, _, px in decoded_images(pdf):
                 for band in range(px.shape[2]):
                     vals = px[:, :, band].astype(np.int64).ravel()
                     if vals.size and (vals.min() < 0 or vals.max() > 65535):
@@ -382,17 +360,12 @@ def _cell_value_counts(images: DataFrame, res: int) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from ..functions.udfs import _decode_full, pixel_cell_groups
-    from ..tiff.meta import TiffError
+    from ..functions.udfs import decoded_images, pixel_cell_groups
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out: list[tuple] = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    m, px = _decode_full(rec.bytes, max_bands=1)
-                except TiffError:
-                    continue
+            for _, m, px in decoded_images(pdf, max_bands=1):
                 groups = pixel_cell_groups(m, px, res)
                 if groups is None:
                     continue

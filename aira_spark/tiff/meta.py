@@ -147,26 +147,33 @@ def walk_directories(buf: bytes, max_pages: int = 1024) -> tuple[str, int, list[
     return bo, version, dirs
 
 
+def _first(e: RawEntry, bo: str, kind: str) -> Any:
+    # a scalar read of an entry that carries no value is corrupt input
+    if e.count == 0:
+        raise TiffError("Expected 1 value, found 0")
+    return struct.unpack_from(bo + kind, e.raw)[0]
+
+
 def _decode_scalar_u32(e: RawEntry, bo: str) -> int:
     # 'decode! as u32': Short widened, Long exact (metadata.rs:428-433)
     if e.dtype == T.DTYPE_SHORT:
-        return struct.unpack_from(bo + "H", e.raw)[0]
+        return _first(e, bo, "H")
     if e.dtype == T.DTYPE_LONG:
-        return struct.unpack_from(bo + "I", e.raw)[0]
+        return _first(e, bo, "I")
     raise TiffError(f"Unexpected dtype {e.dtype} for tag {e.tag}")
 
 
 def _decode_scalar_u16(e: RawEntry, bo: str) -> int:
     if e.dtype != T.DTYPE_SHORT:
         raise TiffError(f"Unexpected dtype {e.dtype} for tag {e.tag}")
-    return struct.unpack_from(bo + "H", e.raw)[0]
+    return _first(e, bo, "H")
 
 
 def _decode_only_u32(e: RawEntry, bo: str) -> int:
     # 'decode! into u32': Long only (NEW_SUBFILE_TYPE)
     if e.dtype != T.DTYPE_LONG:
         raise TiffError(f"Unexpected dtype {e.dtype} for tag {e.tag}")
-    return struct.unpack_from(bo + "I", e.raw)[0]
+    return _first(e, bo, "I")
 
 
 def _decode_vec_u16(e: RawEntry, bo: str) -> list[int]:
@@ -186,6 +193,8 @@ def _decode_vec_u64(e: RawEntry, bo: str) -> list[int]:
 def _decode_rational(e: RawEntry, bo: str) -> tuple[int, int]:
     if e.dtype != T.DTYPE_RATIONAL:
         raise TiffError(f"Unexpected dtype {e.dtype} for tag {e.tag}")
+    if e.count == 0:
+        raise TiffError("Expected 1 value, found 0")
     return struct.unpack_from(bo + "II", e.raw)
 
 
@@ -235,6 +244,15 @@ def entry_value(dtype: int, count: int, raw: bytes, bo: str) -> Any:
         v = struct.unpack_from(f"{bo}{2 * count}{kind}", raw)
         return list(zip(v[::2], v[1::2]))
     raise TiffError(f"Unknown entry dtype {dtype}")
+
+
+def _geo_values(custom: dict[int, tuple[int, int, bytes]], tag: int, need: int, bo: str) -> list:
+    dtype, count, raw = custom[tag]
+    if dtype not in _SIMPLE_FMT:
+        raise TiffError(f"Invalid tag {tag}: non-numeric dtype {dtype}")
+    if count < need:
+        raise TiffError(f"Invalid tag {tag}: expected at least {need} values, found {count}")
+    return entry_value(dtype, count, raw, bo)
 
 
 # tag -> (field name, decoder fn); everything else becomes a custom entry
@@ -387,6 +405,16 @@ def build_metadata(directory: Directory, bo: str) -> dict[str, Any]:
             "unit": b.get("resolution_unit", T.RESUNIT_INCH),
         }
 
+    # GeoTIFF transform (ModelPixelScale, ModelTiepoint), parsed and checked
+    # once here: consumers index scale[0:2] and tiepoint[0:2], [3:5] of
+    # meta["geo"], which is None unless both tags are present
+    geo = None
+    if T.MODEL_PIXEL_SCALE in custom and T.MODEL_TIEPOINT in custom:
+        geo = (
+            _geo_values(custom, T.MODEL_PIXEL_SCALE, 2, bo),
+            _geo_values(custom, T.MODEL_TIEPOINT, 5, bo),
+        )
+
     return {
         "byteorder": bo,
         "width": width,
@@ -413,6 +441,7 @@ def build_metadata(directory: Directory, bo: str) -> dict[str, Any]:
         "software": b.get("software"),
         "datetime": b.get("datetime"),
         "custom": custom,
+        "geo": geo,
     }
 
 
@@ -508,9 +537,9 @@ def parse_geokeys(meta: dict[str, Any]) -> dict[str, Any] | None:
     if kd is None:
         return None
     bo = meta["byteorder"]
+    if kd[0] != T.DTYPE_SHORT:
+        raise TiffError(f"Invalid tag {T.GEO_KEY_DIRECTORY}: non-SHORT dtype {kd[0]}")
     shorts = entry_value(*kd, bo)
-    if isinstance(shorts, int):
-        shorts = [shorts]
     if len(shorts) < 4:
         raise TiffError("GeoKeyDirectory shorter than its 4-short header")
     n_keys = shorts[3]
@@ -525,6 +554,8 @@ def parse_geokeys(meta: dict[str, Any]) -> dict[str, Any] | None:
     ascii_params = None
     ga = custom.get(T.GEO_ASCII_PARAMS)
     if ga is not None:
+        if ga[0] != T.DTYPE_ASCII:
+            raise TiffError(f"Invalid tag {T.GEO_ASCII_PARAMS}: non-ASCII dtype {ga[0]}")
         ascii_params = entry_value(*ga, bo)
     names = {1024: "model_type", 1025: "raster_type", 2048: "epsg", 1026: "citation"}
     for i in range(n_keys):

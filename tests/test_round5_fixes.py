@@ -297,8 +297,7 @@ def test_knn_cleanup_mode_matches_default(spark):
 
 
 def test_k_ring_uses_cell_encoded_res(spark):
-    """k_ring derives the grid from the CELL's own encoded resolution — a
-    mismatched res parameter previously produced valid-looking wrong ids;
+    """k_ring derives the grid from the CELL's own encoded resolution:
     mixed-resolution columns (compact covers) must ring correctly per row."""
     from pyspark.sql import functions as F
 
@@ -306,10 +305,9 @@ def test_k_ring_uses_cell_encoded_res(spark):
 
     cells = [int(np_cell_from_xy(10.0, 20.0, r)) for r in (5, 7, 9)]
     df = spark.createDataFrame([(c,) for c in cells], "cell long")
-    # deliberately pass a WRONG res parameter: it must not matter
     got = {
         r.cell: sorted(r.ring)
-        for r in df.select("cell", k_ring(F.col("cell"), 1, res=3).alias("ring")).collect()
+        for r in df.select("cell", k_ring(F.col("cell"), 1).alias("ring")).collect()
     }
     for c in cells:
         assert got[c] == sorted(int(x) for x in np_k_ring(c, 1)), f"cell {c}"
