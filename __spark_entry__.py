@@ -26,9 +26,16 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from aira_spark.functions.cells import (  # noqa: E402
+    sql_cell_from_xy,
+    sql_cell_pack,
+    sql_cover_bounds,
+    sql_ix,
+    sql_iy,
+)
+
 CELL_RES = 7
 _N = 1 << CELL_RES
-_PACK = "CAST(7 AS BIGINT) * 288230376151711744"
 
 # ---------------------------------------------------------------- helpers
 
@@ -85,39 +92,13 @@ _KNN_QX = "CAST((s_suppkey * 48271) % 350000000 AS DOUBLE) / 1000000.0 - 178.0"
 _KNN_QY = "CAST((s_suppkey * 69621) % 170000000 AS DOUBLE) / 1000000.0 - 86.0"
 
 
-def _sql_ix(x: str) -> str:
-    return (
-        f"CAST(LEAST(GREATEST(FLOOR(({x} - (-180.0)) / 360.0 * {float(_N)}), 0), {_N - 1}) AS BIGINT)"
-    )
-
-
-def _sql_iy(y: str) -> str:
-    return (
-        f"CAST(LEAST(GREATEST(FLOOR(({y} - (-90.0)) / 180.0 * {float(_N)}), 0), {_N - 1}) AS BIGINT)"
-    )
-
-
 def _sql_cell(x: str, y: str) -> str:
-    return f"({_PACK} + {_sql_ix(x)} * 536870912 + {_sql_iy(y)})"
-
-
-def _sql_cell_at(x: str, y: str, res: int) -> str:
-    """cell pack at an arbitrary resolution (the _sql_cell family is pinned
-    to CELL_RES; cell_anomalies runs coarser)."""
-    n = 1 << res
-    ix = f"CAST(LEAST(GREATEST(FLOOR(({x} - (-180.0)) / 360.0 * {float(n)}), 0), {n - 1}) AS BIGINT)"
-    iy = f"CAST(LEAST(GREATEST(FLOOR(({y} - (-90.0)) / 180.0 * {float(n)}), 0), {n - 1}) AS BIGINT)"
-    return (
-        f"(CAST({res} AS BIGINT) * 288230376151711744 + {ix} * 536870912 + {iy})"
-    )
+    return sql_cell_from_xy(x, y, CELL_RES)
 
 
 def _sql_cover(xmin: str, ymin: str, xmax: str, ymax: str) -> str:
-    """Returns ix0/ix1/iy0/iy1 select-list fragment (mirrors cells.cover_rect)."""
-    ix0 = f"CAST(LEAST(GREATEST(FLOOR(({xmin} - (-180.0)) / 360.0 * {float(_N)}), 0), {_N - 1}) AS BIGINT)"
-    iy0 = f"CAST(LEAST(GREATEST(FLOOR(({ymin} - (-90.0)) / 180.0 * {float(_N)}), 0), {_N - 1}) AS BIGINT)"
-    ix1 = f"GREATEST(CAST(LEAST(GREATEST(CEIL(({xmax} - (-180.0)) / 360.0 * {float(_N)}) - 1, 0), {_N - 1}) AS BIGINT), {ix0})"
-    iy1 = f"GREATEST(CAST(LEAST(GREATEST(CEIL(({ymax} - (-90.0)) / 180.0 * {float(_N)}) - 1, 0), {_N - 1}) AS BIGINT), {iy0})"
+    """Returns ix0/ix1/iy0/iy1 select-list fragment (cells.sql_cover_bounds)."""
+    ix0, iy0, ix1, iy1 = sql_cover_bounds(xmin, ymin, xmax, ymax, CELL_RES)
     return f"{ix0} AS ix0, {ix1} AS ix1, {iy0} AS iy0, {iy1} AS iy1"
 
 
@@ -125,9 +106,7 @@ def _fine_cte_sql(modulo: int = 8, patch_bits: int = 4) -> str:
     """Full WITH prefix ending in `fine(fx, fy, val)` — the max-composited
     mosaic fine grid recomputed from first principles (pixel formula
     (r*7 + c*13 + k) % 256), shared by the raster-stack oracles."""
-    nf = 1 << (CELL_RES + patch_bits)
-    fix = f"CAST(LEAST(GREATEST(FLOOR((x - (-180.0)) / 360.0 * {float(nf)}), 0), {nf - 1}) AS BIGINT)"
-    fiy = f"CAST(LEAST(GREATEST(FLOOR((y - (-90.0)) / 180.0 * {float(nf)}), 0), {nf - 1}) AS BIGINT)"
+    fix, fiy = sql_ix("x", CELL_RES + patch_bits), sql_iy("y", CELL_RES + patch_bits)
     return f"""
 WITH {_IMG_CTE},
 sel AS (SELECT * FROM meta WHERE k % {modulo} = 0),
@@ -1313,11 +1292,7 @@ def entry(spark: SparkSession) -> DataFrame:
     )
     pts = points_table(spark, sf_dir).select(
         "point_id",
-        F.expr(
-            f"{_PACK} + "
-            f"CAST(LEAST(GREATEST(FLOOR((x - (-180.0)) / 360.0 * {float(_N)}), 0), {_N - 1}) AS BIGINT) * 536870912 + "
-            f"CAST(LEAST(GREATEST(FLOOR((y - (-90.0)) / 180.0 * {float(_N)}), 0), {_N - 1}) AS BIGINT)"
-        ).alias("cell"),
+        F.expr(_sql_cell("x", "y")).alias("cell"),
     )
     return (
         cover.join(pts, "cell")
@@ -3329,14 +3304,7 @@ def _emerging_grid_exprs() -> tuple[str, str, str, str, int]:
     16x16 coarse grid (CELL_RES - 3), 3-day epochs over the 30-day events
     span, value in exact cents."""
     n = 1 << (CELL_RES - 3)
-    gx = (
-        f"CAST(LEAST(GREATEST(FLOOR(({_EV_X} - (-180.0)) / 360.0 * "
-        f"{float(n)}), 0), {n - 1}) AS BIGINT)"
-    )
-    gy = (
-        f"CAST(LEAST(GREATEST(FLOOR(({_EV_Y} - (-90.0)) / 180.0 * "
-        f"{float(n)}), 0), {n - 1}) AS BIGINT)"
-    )
+    gx, gy = sql_ix(_EV_X, CELL_RES - 3), sql_iy(_EV_Y, CELL_RES - 3)
     return gx, gy, "{day} DIV 3", "CAST(FLOOR(value * 100.0) AS BIGINT)", n
 
 
@@ -4928,7 +4896,7 @@ def _cover_ctes(modulo: int | None = None) -> str:
 cov AS (SELECT image_id, {_sql_cover('xmin', 'ymin', 'xmax', 'ymax')} FROM fp),
 xs AS (SELECT image_id, iy0, iy1, unnest(generate_series(ix0, ix1)) AS ix FROM cov),
 cells AS (SELECT image_id, ix, unnest(generate_series(iy0, iy1)) AS iy FROM xs),
-cover AS (SELECT image_id, ({_PACK} + ix * 536870912 + iy) AS cell FROM cells)"""
+cover AS (SELECT image_id, {sql_cell_pack(CELL_RES, 'ix', 'iy')} AS cell FROM cells)"""
 
 
 def _oracle_cell_cover(modulo: int | None = None) -> str:
@@ -4999,7 +4967,7 @@ bbox AS (
 ),
 cov AS (SELECT poly_id, category, {_sql_cover('xmin', 'ymin', 'xmax', 'ymax')} FROM bbox),
 xs AS (SELECT poly_id, category, iy0, iy1, unnest(generate_series(ix0, ix1)) AS ix FROM cov),
-cells AS (SELECT poly_id, category, ({_PACK} + ix * 536870912 + unnest(generate_series(iy0, iy1))) AS cell FROM xs)
+cells AS (SELECT poly_id, category, {sql_cell_pack(CELL_RES, 'ix', 'unnest(generate_series(iy0, iy1))')} AS cell FROM xs)
 SELECT category,
   CAST(SUM(s.n_px) AS BIGINT) AS n_px, CAST(SUM(s.sum_px) AS BIGINT) AS sum_px,
   CAST(MIN(s.min_px) AS BIGINT) AS min_px, CAST(MAX(s.max_px) AS BIGINT) AS max_px
@@ -5375,8 +5343,7 @@ FROM vals GROUP BY 1, 2
 
 def _oracle_mosaic() -> str:
     nf = 1 << (CELL_RES + 4)  # fine grid: 16x16 subcells per cell
-    fix = f"CAST(LEAST(GREATEST(FLOOR((x - (-180.0)) / 360.0 * {float(nf)}), 0), {nf - 1}) AS BIGINT)"
-    fiy = f"CAST(LEAST(GREATEST(FLOOR((y - (-90.0)) / 180.0 * {float(nf)}), 0), {nf - 1}) AS BIGINT)"
+    fix, fiy = sql_ix("x", CELL_RES + 4), sql_iy("y", CELL_RES + 4)
     return f"""
 WITH {_IMG_CTE},
 sel AS (SELECT * FROM meta WHERE k % 8 = 0),
@@ -5389,7 +5356,7 @@ vals AS (
   FROM pxs
 ),
 fine AS (SELECT val, {fix} AS fx, {fiy} AS fy FROM vals)
-SELECT ({_PACK} + (fx // 16) * 536870912 + (fy // 16)) AS cell,
+SELECT {sql_cell_pack(CELL_RES, '(fx // 16)', '(fy // 16)')} AS cell,
   CAST(fy % 16 AS BIGINT) AS pr, CAST(fx % 16 AS BIGINT) AS pc,
   CAST(MAX(val) AS BIGINT) AS val
 FROM fine GROUP BY 1, 2, 3
@@ -5400,8 +5367,7 @@ def _oracle_focal_mean() -> str:
     # same fine grid as the mosaic oracle, then the 9-offset scatter + agg;
     # HAVING bool_or(is_center) mirrors the Spark max(is_center) filter
     nf = 1 << (CELL_RES + 4)
-    fix = f"CAST(LEAST(GREATEST(FLOOR((x - (-180.0)) / 360.0 * {float(nf)}), 0), {nf - 1}) AS BIGINT)"
-    fiy = f"CAST(LEAST(GREATEST(FLOOR((y - (-90.0)) / 180.0 * {float(nf)}), 0), {nf - 1}) AS BIGINT)"
+    fix, fiy = sql_ix("x", CELL_RES + 4), sql_iy("y", CELL_RES + 4)
     return f"""
 WITH {_IMG_CTE},
 sel AS (SELECT * FROM meta WHERE k % 8 = 0),
@@ -5534,8 +5500,7 @@ def _oracle_focal_gradient() -> str:
     # fine-grid CTE as in the mosaic/focal oracles; scatter weights mirror
     # operators/focal.py GRAD_OFFSETS with the sign flip applied there
     nf = 1 << (CELL_RES + 4)
-    fix = f"CAST(LEAST(GREATEST(FLOOR((x - (-180.0)) / 360.0 * {float(nf)}), 0), {nf - 1}) AS BIGINT)"
-    fiy = f"CAST(LEAST(GREATEST(FLOOR((y - (-90.0)) / 180.0 * {float(nf)}), 0), {nf - 1}) AS BIGINT)"
+    fix, fiy = sql_ix("x", CELL_RES + 4), sql_iy("y", CELL_RES + 4)
     return f"""
 WITH {_IMG_CTE},
 sel AS (SELECT * FROM meta WHERE k % 8 = 0),
@@ -6175,7 +6140,7 @@ def _oracle_kde() -> str:
     cte = f"""
 WITH p AS ({points_oracle_sql()}),
 cnts AS (
-  SELECT {_sql_ix('x')} AS gx, {_sql_iy('y')} AS gy,
+  SELECT {sql_ix('x', CELL_RES)} AS gx, {sql_iy('y', CELL_RES)} AS gy,
          CAST(COUNT(*) AS BIGINT) AS cnt
   FROM p GROUP BY 1, 2
 )"""
@@ -6338,7 +6303,7 @@ def _oracle_perm_entropy() -> str:
     from aira_spark.operators.permentropy import oracle_perm_entropy_sql
 
     return oracle_perm_entropy_sql(
-        f"SELECT {_sql_cell_at(_EV_X, _EV_Y, CELL_RES - 3)} AS cell, "
+        f"SELECT {sql_cell_from_xy(_EV_X, _EV_Y, CELL_RES - 3)} AS cell, "
         "CAST(CAST(ts AS DATE) - DATE '2024-01-01' AS BIGINT) AS day, "
         "CAST(FLOOR(value * 100.0) AS BIGINT) AS cents FROM events"
     )
@@ -6510,7 +6475,7 @@ def _oracle_acf() -> str:
     from aira_spark.operators.acf import oracle_acf_sql
 
     coarse = (
-        f"SELECT {_sql_cell_at(_EV_X, _EV_Y, CELL_RES - 3)} AS cell, "
+        f"SELECT {sql_cell_from_xy(_EV_X, _EV_Y, CELL_RES - 3)} AS cell, "
         "CAST(CAST(ts AS DATE) - DATE '2024-01-01' AS BIGINT) AS day, "
         "CAST(FLOOR(value * 100.0) AS BIGINT) AS cents FROM events"
     )
@@ -6537,7 +6502,7 @@ def _oracle_joincount() -> str:
     from aira_spark.operators.joincount import oracle_joincount_sql
 
     cells = (
-        f"SELECT event_type AS grp, {_sql_cell_at(_EV_X, _EV_Y, CELL_RES - 3)}"
+        f"SELECT event_type AS grp, {sql_cell_from_xy(_EV_X, _EV_Y, CELL_RES - 3)}"
         " AS cell, CAST(COUNT(*) >= 2 AS INTEGER) AS mark"
         " FROM events GROUP BY 1, 2"
     )
@@ -6668,8 +6633,7 @@ def _oracle_gap_fill() -> str:
 
 def _oracle_mosaic_blend() -> str:
     nf = 1 << (CELL_RES + 4)
-    fix = f"CAST(LEAST(GREATEST(FLOOR((x - (-180.0)) / 360.0 * {float(nf)}), 0), {nf - 1}) AS BIGINT)"
-    fiy = f"CAST(LEAST(GREATEST(FLOOR((y - (-90.0)) / 180.0 * {float(nf)}), 0), {nf - 1}) AS BIGINT)"
+    fix, fiy = sql_ix("x", CELL_RES + 4), sql_iy("y", CELL_RES + 4)
     return f"""
 WITH {_IMG_CTE},
 sel AS (SELECT * FROM meta WHERE k % 8 = 0),
@@ -6683,7 +6647,7 @@ vals AS (
   FROM pxs
 ),
 fine AS (SELECT val, wt, {fix} AS fx, {fiy} AS fy FROM vals)
-SELECT ({_PACK} + (fx // 16) * 536870912 + (fy // 16)) AS cell,
+SELECT {sql_cell_pack(CELL_RES, '(fx // 16)', '(fy // 16)')} AS cell,
   CAST(fy % 16 AS BIGINT) AS pr, CAST(fx % 16 AS BIGINT) AS pc,
   CAST(SUM(wt * val) // SUM(wt) AS BIGINT) AS val,
   CAST(SUM(wt) AS BIGINT) AS w_tot
@@ -6762,7 +6726,7 @@ def _oracle_co_location() -> str:
     from aira_spark.operators.trajectory import oracle_colocation_sql
 
     return oracle_colocation_sql(
-        f"SELECT user_id, {_sql_cell_at(_EV_X, _EV_Y, 2)} AS cell, "
+        f"SELECT user_id, {sql_cell_from_xy(_EV_X, _EV_Y, 2)} AS cell, "
         "CAST(date_trunc('hour', ts) AS VARCHAR) AS hour FROM events",
         min_meetings=2,
     )
@@ -6867,7 +6831,7 @@ def _oracle_cell_anomalies() -> str:
     from aira_spark.operators.trend import oracle_anomalies_sql
 
     coarse = (
-        f"SELECT {_sql_cell_at(_EV_X, _EV_Y, CELL_RES - 3)} AS cell, "
+        f"SELECT {sql_cell_from_xy(_EV_X, _EV_Y, CELL_RES - 3)} AS cell, "
         "CAST(CAST(ts AS DATE) - DATE '2024-01-01' AS BIGINT) AS day, "
         "CAST(FLOOR(value * 100.0) AS BIGINT) AS cents FROM events"
     )
@@ -6903,7 +6867,7 @@ pbbox AS (
 pcov AS (SELECT poly_id, {_sql_cover('xmin', 'ymin', 'xmax', 'ymax')} FROM pbbox),
 pxs AS (SELECT poly_id, iy0, iy1, unnest(generate_series(ix0, ix1)) AS ix FROM pcov),
 pcells AS (SELECT poly_id, ix, unnest(generate_series(iy0, iy1)) AS iy FROM pxs),
-pctr AS (SELECT poly_id, ({_PACK} + ix * 536870912 + iy) AS cell,
+pctr AS (SELECT poly_id, {sql_cell_pack(CELL_RES, 'ix', 'iy')} AS cell,
                 {ctr_x} AS px, {ctr_y} AS py FROM pcells),
 pcr AS (
   SELECT c.poly_id, c.cell,
@@ -7009,8 +6973,7 @@ def _fine2_cte_sql() -> str:
     cross-epoch framing — it uses _fine_cte_sql(modulo=8) to compare two
     classifiers on ONE epoch; see kappa.py's docstring)."""
     nf = 1 << (CELL_RES + 4)
-    fix = f"CAST(LEAST(GREATEST(FLOOR((x - (-180.0)) / 360.0 * {float(nf)}), 0), {nf - 1}) AS BIGINT)"
-    fiy = f"CAST(LEAST(GREATEST(FLOOR((y - (-90.0)) / 180.0 * {float(nf)}), 0), {nf - 1}) AS BIGINT)"
+    fix, fiy = sql_ix("x", CELL_RES + 4), sql_iy("y", CELL_RES + 4)
     fine2 = f"""{_IMG_CTE},
 sel AS (SELECT *, (k % 16) // 8 AS epoch FROM meta WHERE k % 8 = 0),
 rws AS (SELECT *, unnest(generate_series(0, h - 1)) AS r FROM sel),
@@ -7104,10 +7067,7 @@ def _oracle_retention() -> str:
 def _oracle_zonal_rollup() -> str:
     # parent cell: same fine-resolution index arithmetic, then the exact bit
     # shift the Spark side performs (ix >> 2 == ix // 4)
-    cell5 = (
-        f"(CAST(5 AS BIGINT) * 288230376151711744 + "
-        f"({_sql_ix('x')} // 4) * 536870912 + ({_sql_iy('y')} // 4))"
-    )
+    cell5 = sql_cell_pack(5, f"({sql_ix('x', CELL_RES)} // 4)", f"({sql_iy('y', CELL_RES)} // 4)")
     return f"""
 WITH {_IMG_CTE},
 sel AS (SELECT * FROM meta WHERE k % 8 = 0),
@@ -7340,7 +7300,7 @@ bbox AS (
 cov AS (SELECT poly_id, {_sql_cover('xmin', 'ymin', 'xmax', 'ymax')} FROM bbox),
 xs AS (SELECT poly_id, iy0, iy1, unnest(generate_series(ix0, ix1)) AS ix FROM cov),
 cells AS (SELECT poly_id, ix, unnest(generate_series(iy0, iy1)) AS iy FROM xs),
-ctr AS (SELECT poly_id, ({_PACK} + ix * 536870912 + iy) AS cell,
+ctr AS (SELECT poly_id, {sql_cell_pack(CELL_RES, 'ix', 'iy')} AS cell,
                {ctr_x} AS px, {ctr_y} AS py FROM cells),
 cr AS (
   SELECT c.poly_id, c.cell,
@@ -7373,7 +7333,7 @@ bbox AS (
 cov AS (SELECT poly_id, {_sql_cover('xmin', 'ymin', 'xmax', 'ymax')} FROM bbox),
 xs AS (SELECT poly_id, iy0, iy1, unnest(generate_series(ix0, ix1)) AS ix FROM cov),
 cells AS (SELECT poly_id, ix, unnest(generate_series(iy0, iy1)) AS iy FROM xs),
-ctr AS (SELECT poly_id, ({_PACK} + ix * 536870912 + iy) AS cell,
+ctr AS (SELECT poly_id, {sql_cell_pack(CELL_RES, 'ix', 'iy')} AS cell,
                {ctr_x} AS px, {ctr_y} AS py FROM cells),
 cr AS (
   SELECT c.poly_id, c.cell,
@@ -7808,7 +7768,7 @@ def _oracle_point_density() -> str:
     return f"""
 WITH p AS ({points_oracle_sql()}),
 cnts AS (
-  SELECT {_sql_ix('x')} AS gx, {_sql_iy('y')} AS gy,
+  SELECT {sql_ix('x', CELL_RES)} AS gx, {sql_iy('y', CELL_RES)} AS gy,
          CAST(COUNT(*) AS BIGINT) AS cnt
   FROM p GROUP BY 1, 2
 ),
@@ -7857,7 +7817,7 @@ def _oracle_cover_morph() -> str:
     )
     # oracle_morph_sql wraps `WITH {base_cover_sql}` — strip our leading
     # "WITH" marker: _IMG_CTE is a bare CTE list already
-    return oracle_morph_sql(base, k=1, res=CELL_RES, pack=7 * (1 << 58))
+    return oracle_morph_sql(base, k=1)
 
 
 def oracle_sql() -> dict[str, str]:

@@ -6,16 +6,24 @@ non-negative int64:
 
     cell = (res << 58) | (ix << 29) | iy        (res <= 29, ix/iy < 2^29)
 
-This keeps parent/child/k-ring arithmetic to pure integer ops, so every
-operation exists in three equivalent forms: numpy (serial oracle library),
-Spark Column expressions (JVM-side, whole-stage-codegen friendly — the scale
-path; no UDFs anywhere), and ANSI SQL (DuckDB correctness oracle). The north
+This keeps parent/child/k-ring arithmetic to pure integer ops. Every
+operation exists as a numpy reference (the serial form the tests check
+against) and as ONE SQL text built by the `sql_*` functions below. Spark
+runs that text through `F.expr` (JVM built-ins, whole-stage-codegen
+friendly, no UDFs: the scale path) and the DuckDB oracle runs the same
+text; `dialect` changes only what the two engines spell differently
+(array functions and lambdas, the unsigned shift). Every literal and
+operand is cast to DOUBLE, since a bare `360.0` is DECIMAL in both. The
+text form is also the cheap one to build: each PySpark Column operator
+costs several py4j round trips, one `F.expr` costs one parse. The north
 rule's "H3/S2 index" semantics (hierarchy, k-ring, cover) follow standard
 definitions; the square grid replaces hexagons since no h3 lib exists here
 (SURVEY.md §7).
 """
 
 from __future__ import annotations
+
+import re
 
 import numpy as np
 from pyspark.sql import Column
@@ -114,125 +122,217 @@ def np_cell_bounds(cell):
     return x, y, x + cw, y + chh
 
 
-# ---------- Spark Column forms (pure built-ins: stay in codegen) ----------
+# ---------- SQL text: the one Spark (F.expr) and DuckDB form ----------
+
+_IDENT = re.compile(r"[A-Za-z_]\w*(\.[A-Za-z_]\w*)*")
 
 
-def _clamp(c: Column, lo, hi) -> Column:
-    return F.least(F.greatest(c, F.lit(lo)), F.lit(hi))
-
-
-def cell_pack(res: int, ix: Column, iy: Column) -> Column:
-    return (
-        F.lit(int(res) << RES_SHIFT).cast("long")
-        + ix.cast("long") * F.lit(1 << IX_SHIFT).cast("long")
-        + iy.cast("long")
+def sql_operand(v) -> str:
+    """SQL text of a formula operand: text as is, an `F.col` reference by
+    its name, an `F.expr` Column by its text. Any other Column is a
+    TypeError: its text is not recoverable, and building it as a Column
+    tree is what the text forms exist to avoid."""
+    if isinstance(v, str):
+        return f"({v})"
+    if isinstance(v, Column):
+        node = v._jc.node()
+        kind = node.getClass().getSimpleName()
+        if kind in ("SqlExpression", "UnresolvedAttribute"):
+            text = node.sql()
+            if kind == "SqlExpression" or _IDENT.fullmatch(text):
+                return f"({text})"
+    raise TypeError(
+        f"expected SQL text, an F.col reference or an F.expr Column, got {v!r}"
     )
 
 
-def cell_from_xy(x: Column, y: Column, res: int = DEFAULT_RES) -> Column:
-    n = 1 << res
-    ix = _clamp(F.floor((x - F.lit(X0)) / F.lit(SPAN_X) * F.lit(float(n))), 0, n - 1)
-    iy = _clamp(F.floor((y - F.lit(Y0)) / F.lit(SPAN_Y) * F.lit(float(n))), 0, n - 1)
-    return cell_pack(res, ix, iy)
+def sql_double(v) -> str:
+    """A DOUBLE literal or operand: a bare `360.0` is DECIMAL in both engines."""
+    if isinstance(v, (int, float)):
+        return f"CAST({float(v)!r} AS DOUBLE)"
+    return f"CAST({sql_operand(v)} AS DOUBLE)"
 
 
-def cell_res(cell: Column) -> Column:
-    return F.shiftrightunsigned(cell, RES_SHIFT)
+def sql_seq(lo: str, hi: str, dialect: str = "spark") -> str:
+    """Inclusive integer range lo..hi (callers keep lo <= hi: Spark's
+    sequence counts down where DuckDB's is empty)."""
+    fn = "generate_series" if dialect == "duckdb" else "sequence"
+    return f"{fn}({lo}, {hi})"
 
 
-def cell_ix(cell: Column) -> Column:
-    return F.shiftrightunsigned(cell, IX_SHIFT).bitwiseAND(F.lit(COORD_MASK))
+def sql_map(arr: str, var: str, body: str, dialect: str = "spark") -> str:
+    fn = "list_transform" if dialect == "duckdb" else "transform"
+    return f"{fn}({arr}, {var} -> {body})"
 
 
-def cell_iy(cell: Column) -> Column:
-    return cell.bitwiseAND(F.lit(COORD_MASK))
+def sql_count(arr: str, var: str, pred: str, dialect: str = "spark") -> str:
+    """Number of elements satisfying pred (NULL counts as false)."""
+    if dialect == "duckdb":
+        return f"len(list_filter({arr}, {var} -> {pred}))"
+    return f"size(filter({arr}, {var} -> {pred}))"
 
 
-def cell_parent(cell: Column, steps: int = 1) -> Column:
-    res = cell_res(cell) - F.lit(steps)
-    return (
-        res * F.lit(1 << RES_SHIFT).cast("long")
-        + F.shiftrightunsigned(cell_ix(cell), steps) * F.lit(1 << IX_SHIFT).cast("long")
-        + F.shiftrightunsigned(cell_iy(cell), steps)
+def sql_any(arr: str, var: str, pred: str, dialect: str = "spark") -> str:
+    if dialect == "duckdb":
+        return f"({sql_count(arr, var, pred, dialect)} > 0)"
+    return f"exists({arr}, {var} -> {pred})"
+
+
+def _shr(dialect: str) -> str:
+    # cell ids are non-negative, where DuckDB's arithmetic >> equals >>>
+    return ">>" if dialect == "duckdb" else ">>>"
+
+
+def _grid_u(v, origin: float, span: float, res: int) -> str:
+    """Continuous grid coordinate of v at `res` (DOUBLE)."""
+    return f"(({sql_double(v)} - {sql_double(origin)}) / {sql_double(span)} * {sql_double(1 << res)})"
+
+
+def _clamp_index(idx: str, res: int) -> str:
+    return f"CAST(LEAST(GREATEST({idx}, 0), {(1 << res) - 1}) AS BIGINT)"
+
+
+def sql_ix(x, res: int = DEFAULT_RES) -> str:
+    """Grid column of x at `res` (BIGINT, clamped to the world)."""
+    return _clamp_index(f"FLOOR({_grid_u(x, X0, SPAN_X, res)})", res)
+
+
+def sql_iy(y, res: int = DEFAULT_RES) -> str:
+    return _clamp_index(f"FLOOR({_grid_u(y, Y0, SPAN_Y, res)})", res)
+
+
+def sql_cell_pack(res, ix: str, iy: str) -> str:
+    """Pack BIGINT grid indices; `res` is an int or BIGINT SQL text."""
+    r = res << RES_SHIFT if isinstance(res, int) else f"{res} * {1 << RES_SHIFT}"
+    return f"({r} + {ix} * {1 << IX_SHIFT} + {iy})"
+
+
+def sql_cell_from_xy(x, y, res: int = DEFAULT_RES) -> str:
+    return sql_cell_pack(res, sql_ix(x, res), sql_iy(y, res))
+
+
+def sql_cell_res(cell, dialect: str = "spark") -> str:
+    return f"({sql_operand(cell)} {_shr(dialect)} {RES_SHIFT})"
+
+
+def sql_cell_ix(cell, dialect: str = "spark") -> str:
+    return f"(({sql_operand(cell)} {_shr(dialect)} {IX_SHIFT}) & {COORD_MASK})"
+
+
+def sql_cell_iy(cell, dialect: str = "spark") -> str:
+    return f"({sql_operand(cell)} & {COORD_MASK})"
+
+
+def sql_cell_parent(cell, steps: int = 1, dialect: str = "spark") -> str:
+    cell, shr = sql_operand(cell), _shr(dialect)
+    return sql_cell_pack(
+        f"({sql_cell_res(cell, dialect)} - {steps})",
+        f"({sql_cell_ix(cell, dialect)} {shr} {steps})",
+        f"({sql_cell_iy(cell, dialect)} {shr} {steps})",
     )
 
 
-def k_ring(cell: Column, k: int) -> Column:
-    """array<long> of cells within Chebyshev distance k; pure sequence+transform.
-
-    The ring is computed at the CELL'S OWN encoded resolution (extracted
-    per row, exactly like the numpy twin np_k_ring), so mixed-resolution
-    columns (compact covers) are correct and no caller-supplied resolution
-    can disagree with the cells. All ops stay codegen-friendly built-ins."""
-    cres = cell_res(cell)
-    # python-api shiftleft() only takes an int literal for numBits;
-    # call_function passes the per-row res column through to the SQL form
-    hi = F.call_function(
-        "shiftleft", F.lit(1).cast("long"), cres.cast("int")
-    ) - F.lit(1).cast("long")
-    cx, cy = cell_ix(cell), cell_iy(cell)
-
-    def clamp_col(c: Column) -> Column:
-        return F.least(F.greatest(c, F.lit(0).cast("long")), hi)
-
-    xs = F.sequence(clamp_col(cx - k), clamp_col(cx + k))
-    ys = F.sequence(clamp_col(cy - k), clamp_col(cy + k))
-    packed_res = cres * F.lit(1 << RES_SHIFT).cast("long")
-    return F.flatten(
-        F.transform(
-            ys,
-            lambda iy: F.transform(
-                xs,
-                lambda ix: packed_res
-                + ix.cast("long") * F.lit(1 << IX_SHIFT).cast("long")
-                + iy.cast("long"),
-            ),
-        )
-    )
+def sql_cell_size(cell, dialect: str = "spark") -> tuple[str, str]:
+    """(width, height) of a cell at its own encoded resolution."""
+    n = f"POW({sql_double(2)}, CAST({sql_cell_res(cell, dialect)} AS DOUBLE))"
+    return f"({sql_double(SPAN_X)} / {n})", f"({sql_double(SPAN_Y)} / {n})"
 
 
-def _cover(xmin, ymin, xmax, ymax, res: int, closed: bool, touch_lo: bool = False) -> Column:
-    """Shared cover builder: half-open (ceil-1 upper bound) or closed (floor
-    upper bound — the boundary point's own cell is included). touch_lo
-    additionally extends the LOWER bound one cell when it sits exactly on a
-    grid line, so the cover overlaps the half-open cover of any closed rect
-    that merely touches this one (see cover_rect_touch)."""
-    n = 1 << res
-
-    def lo(v, origin, span):
-        t = (v - F.lit(origin)) / F.lit(span) * F.lit(float(n))
-        idx = F.floor(t)
-        if touch_lo:
-            idx = idx - F.when(t == idx.cast("double"), F.lit(1)).otherwise(F.lit(0))
-        return _clamp(idx, 0, n - 1)
-
-    def hi(v, origin, span, lo_idx):
-        t = (v - F.lit(origin)) / F.lit(span) * F.lit(float(n))
-        idx = F.floor(t) if closed else F.ceil(t) - 1
-        return F.greatest(_clamp(idx, 0, n - 1), lo_idx)
-
-    ix0 = lo(xmin, X0, SPAN_X)
-    iy0 = lo(ymin, Y0, SPAN_Y)
-    ix1 = hi(xmax, X0, SPAN_X, ix0)
-    iy1 = hi(ymax, Y0, SPAN_Y, iy0)
-    return F.flatten(
-        F.transform(
-            F.sequence(iy0, iy1),
-            lambda iy: F.transform(F.sequence(ix0, ix1), lambda ix: cell_pack(res, ix, iy)),
-        )
-    )
+def sql_cell_bounds(cell, dialect: str = "spark") -> tuple[str, str, str, str]:
+    """(xmin, ymin, xmax, ymax) of a cell at its own encoded resolution."""
+    cell = sql_operand(cell)
+    cw, ch = sql_cell_size(cell, dialect)
+    xmin = f"({sql_double(X0)} + CAST({sql_cell_ix(cell, dialect)} AS DOUBLE) * {cw})"
+    ymin = f"({sql_double(Y0)} + CAST({sql_cell_iy(cell, dialect)} AS DOUBLE) * {ch})"
+    return xmin, ymin, f"({xmin} + {cw})", f"({ymin} + {ch})"
 
 
-def cover_rect(
-    xmin: Column, ymin: Column, xmax: Column, ymax: Column, res: int = DEFAULT_RES
-) -> Column:
+def sql_k_ring(cell, k: int, dialect: str = "spark") -> str:
+    """array<bigint> of the cells within Chebyshev distance k, clamped to
+    the grid, at the CELL'S OWN encoded resolution (like np_k_ring), so
+    mixed-resolution columns (compact covers) ring correctly per row."""
+    cell = sql_operand(cell)
+    res = sql_cell_res(cell, dialect)
+    hi = f"((CAST(1 AS BIGINT) << CAST({res} AS INT)) - 1)"
+    ix, iy = sql_cell_ix(cell, dialect), sql_cell_iy(cell, dialect)
+
+    def span(c: str) -> str:
+        return sql_seq(f"GREATEST({c} - {k}, 0)", f"LEAST({c} + {k}, {hi})", dialect)
+
+    inner = sql_map(span(ix), "ring_ix", sql_cell_pack(res, "ring_ix", "ring_iy"), dialect)
+    return f"flatten({sql_map(span(iy), 'ring_iy', inner, dialect)})"
+
+
+COVER_MODES = ("half_open", "closed", "touch")
+
+
+def sql_cover_bounds(xmin, ymin, xmax, ymax, res: int = DEFAULT_RES, mode: str = "half_open"):
+    """(ix0, iy0, ix1, iy1) BIGINT index bounds of a rect's cell cover.
+
+    half_open: [xmin, xmax) x [ymin, ymax); the high index is ceil(u) - 1,
+    so an edge exactly on a cell boundary does not pull in the next cell.
+    closed: the high index is floor(u), so the boundary point's own cell is
+    included (for inclusive predicates such as dist <= d).
+    touch: closed, and a low bound exactly on a grid line also takes the
+    cell below it, so any closed rect touching this one shares >= 1 cell
+    with its half-open cover (see cover_rect_touch).
+    Degenerate rects still cover their point's cell (hi >= lo)."""
+    if mode not in COVER_MODES:
+        raise ValueError(f"cover mode must be one of {COVER_MODES}, got {mode!r}")
+
+    def lo(v, origin, span) -> str:
+        t = _grid_u(v, origin, span, res)
+        if mode == "touch":
+            return _clamp_index(f"FLOOR({t}) - CASE WHEN {t} = CAST(FLOOR({t}) AS DOUBLE) THEN 1 ELSE 0 END", res)
+        return _clamp_index(f"FLOOR({t})", res)
+
+    def hi(v, origin, span, lo_idx: str) -> str:
+        t = _grid_u(v, origin, span, res)
+        idx = f"CEIL({t}) - 1" if mode == "half_open" else f"FLOOR({t})"
+        return f"GREATEST({_clamp_index(idx, res)}, {lo_idx})"
+
+    ix0, iy0 = lo(xmin, X0, SPAN_X), lo(ymin, Y0, SPAN_Y)
+    return ix0, iy0, hi(xmax, X0, SPAN_X, ix0), hi(ymax, Y0, SPAN_Y, iy0)
+
+
+def sql_cover(xmin, ymin, xmax, ymax, res: int = DEFAULT_RES, mode: str = "half_open",
+              dialect: str = "spark") -> str:
+    """array<bigint> cell cover of a rect (modes: sql_cover_bounds)."""
+    ix0, iy0, ix1, iy1 = sql_cover_bounds(xmin, ymin, xmax, ymax, res, mode)
+    inner = sql_map(sql_seq(ix0, ix1, dialect), "cov_ix", sql_cell_pack(res, "cov_ix", "cov_iy"), dialect)
+    return f"flatten({sql_map(sql_seq(iy0, iy1, dialect), 'cov_iy', inner, dialect)})"
+
+
+# ---------- Spark forms: F.expr of the SQL text (operands: sql_operand) ----------
+
+
+def cell_from_xy(x, y, res: int = DEFAULT_RES) -> Column:
+    return F.expr(sql_cell_from_xy(x, y, res))
+
+
+def cell_ix(cell) -> Column:
+    return F.expr(sql_cell_ix(cell))
+
+
+def cell_iy(cell) -> Column:
+    return F.expr(sql_cell_iy(cell))
+
+
+def cell_parent(cell, steps: int = 1) -> Column:
+    return F.expr(sql_cell_parent(cell, steps))
+
+
+def k_ring(cell, k: int) -> Column:
+    """array<long> of cells within Chebyshev distance k (sql_k_ring)."""
+    return F.expr(sql_k_ring(cell, k))
+
+
+def cover_rect(xmin, ymin, xmax, ymax, res: int = DEFAULT_RES) -> Column:
     """array<long> cell cover of a half-open rect — JVM-side, explode-ready."""
-    return _cover(xmin, ymin, xmax, ymax, res, closed=False)
+    return F.expr(sql_cover(xmin, ymin, xmax, ymax, res, "half_open"))
 
 
-def cover_rect_closed(
-    xmin: Column, ymin: Column, xmax: Column, ymax: Column, res: int = DEFAULT_RES
-) -> Column:
+def cover_rect_closed(xmin, ymin, xmax, ymax, res: int = DEFAULT_RES) -> Column:
     """Cell cover of the CLOSED rect [xmin, xmax] x [ymin, ymax].
 
     Unlike cover_rect (half-open: a rect ending exactly on a cell boundary
@@ -241,12 +341,10 @@ def cover_rect_closed(
     downstream predicate is inclusive (e.g. dist <= d: a point at exactly
     distance d sits at x == qx + d, whose cell_from_xy cell must be covered).
     """
-    return _cover(xmin, ymin, xmax, ymax, res, closed=True)
+    return F.expr(sql_cover(xmin, ymin, xmax, ymax, res, "closed"))
 
 
-def cover_rect_touch(
-    xmin: Column, ymin: Column, xmax: Column, ymax: Column, res: int = DEFAULT_RES
-) -> Column:
+def cover_rect_touch(xmin, ymin, xmax, ymax, res: int = DEFAULT_RES) -> Column:
     """Touch-inclusive cover: closed upper bound AND a lower bound extended one
     cell when it lies exactly on a grid line.
 
@@ -258,31 +356,7 @@ def cover_rect_touch(
     closed (e.g. footprint_polygon_join); the at-most-one extra row/column of
     cells only enlarges the candidate superset.
     """
-    return _cover(xmin, ymin, xmax, ymax, res, closed=True, touch_lo=True)
-
-
-def cell_bounds_xmin(cell: Column) -> Column:
-    n = F.pow(F.lit(2.0), cell_res(cell).cast("double"))
-    return F.lit(X0) + cell_ix(cell).cast("double") * (F.lit(SPAN_X) / n)
-
-
-def cell_bounds_ymin(cell: Column) -> Column:
-    n = F.pow(F.lit(2.0), cell_res(cell).cast("double"))
-    return F.lit(Y0) + cell_iy(cell).cast("double") * (F.lit(SPAN_Y) / n)
-
-
-# ---------- SQL fragment builders (DuckDB oracle parity) ----------
-
-
-def sql_cell_from_xy(x: str, y: str, res: int = DEFAULT_RES) -> str:
-    """ANSI-SQL text computing the same cell id (for oracle_sql strings)."""
-    n = 1 << res
-    ix = f"LEAST(GREATEST(FLOOR(({x} - ({X0})) / {SPAN_X} * {float(n)}), 0), {n - 1})"
-    iy = f"LEAST(GREATEST(FLOOR(({y} - ({Y0})) / {SPAN_Y} * {float(n)}), 0), {n - 1})"
-    return (
-        f"(CAST({res} AS BIGINT) * {1 << RES_SHIFT} + "
-        f"CAST({ix} AS BIGINT) * {1 << IX_SHIFT} + CAST({iy} AS BIGINT))"
-    )
+    return F.expr(sql_cover(xmin, ymin, xmax, ymax, res, "touch"))
 
 
 # ---------------------------------------------------------------- Z-order
@@ -314,12 +388,10 @@ def morton_key(ix: Column, iy: Column, res: int = DEFAULT_RES) -> Column:
     return terms.cast("long")
 
 
-def morton_from_xy(x: Column, y: Column, res: int = DEFAULT_RES) -> Column:
-    """Morton key straight from lon/lat (same grid as cell_from_xy)."""
-    n = 1 << res
-    ix = _clamp(F.floor((x - F.lit(X0)) / F.lit(SPAN_X) * F.lit(float(n))), 0, n - 1)
-    iy = _clamp(F.floor((y - F.lit(Y0)) / F.lit(SPAN_Y) * F.lit(float(n))), 0, n - 1)
-    return morton_key(ix.cast("long"), iy.cast("long"), res)
+def morton_from_xy(x, y, res: int = DEFAULT_RES) -> Column:
+    """Morton key straight from lon/lat (same grid as cell_from_xy); x, y
+    are SQL text or F.col references."""
+    return morton_key(F.expr(sql_ix(x, res)), F.expr(sql_iy(y, res)), res)
 
 
 # --------------------------------------------------------------- Hilbert

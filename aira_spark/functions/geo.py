@@ -44,9 +44,9 @@ def sql_haversine_km(lat1: str, lon1: str, lat2: str, lon2: str) -> str:
     return f"(2.0 * {EARTH_RADIUS_KM} * ASIN(SQRT({h})))"
 
 
-def disk_margins_deg(qy: Column, d_km: float) -> tuple[Column, Column]:
+def sql_disk_margins_deg(qy: str, d_km: float) -> tuple[str, str]:
     """Conservative (superset) lat/lon half-extents in degrees of a d_km
-    great-circle disk centered at latitude qy.
+    great-circle disk centered at latitude qy, as SQL text.
 
     lat: central angle >= |dlat|, so |dlat| <= d/R exactly.
     lon: haversine >= 2R * cos(phi_max) * sin(dlon/2) >= (2R cos(phi_max)/pi)
@@ -59,9 +59,12 @@ def disk_margins_deg(qy: Column, d_km: float) -> tuple[Column, Column]:
     """
     import math
 
-    dlat = math.degrees(d_km / EARTH_RADIUS_KM)
-    phi_max = F.abs(qy) + F.lit(dlat)
-    dlon = F.when(phi_max >= F.lit(89.9), F.lit(360.0)).otherwise(
-        F.lit(90.0 * d_km / EARTH_RADIUS_KM) / F.cos(F.radians(phi_max))
+    from .cells import sql_double
+
+    dlat = sql_double(math.degrees(d_km / EARTH_RADIUS_KM))
+    phi_max = f"(ABS({qy}) + {dlat})"
+    dlon = (
+        f"(CASE WHEN {phi_max} >= {sql_double(89.9)} THEN {sql_double(360.0)} "
+        f"ELSE {sql_double(90.0 * d_km / EARTH_RADIUS_KM)} / COS(RADIANS({phi_max})) END)"
     )
-    return F.lit(dlat), dlon
+    return dlat, dlon

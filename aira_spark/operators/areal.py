@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells import DEFAULT_RES
+from ..functions.cells import DEFAULT_RES, sql_cover_bounds
 from .rasterize import rasterize_to_cells
 
 SCALE = 1_000_000
@@ -94,22 +94,7 @@ def oracle_areal_sql(
     ch = f"(180.0 / {float(n)})"
 
     def _ras(tag: str, edges_sql: str) -> str:
-        ix0 = (
-            f"CAST(LEAST(GREATEST(FLOOR((xmin - (-180.0)) / 360.0 * "
-            f"{float(n)}), 0), {n - 1}) AS BIGINT)"
-        )
-        iy0 = (
-            f"CAST(LEAST(GREATEST(FLOOR((ymin - (-90.0)) / 180.0 * "
-            f"{float(n)}), 0), {n - 1}) AS BIGINT)"
-        )
-        ix1 = (
-            f"GREATEST(CAST(LEAST(GREATEST(CEIL((xmax - (-180.0)) / 360.0 "
-            f"* {float(n)}) - 1, 0), {n - 1}) AS BIGINT), ix0)"
-        )
-        iy1 = (
-            f"GREATEST(CAST(LEAST(GREATEST(CEIL((ymax - (-90.0)) / 180.0 "
-            f"* {float(n)}) - 1, 0), {n - 1}) AS BIGINT), iy0)"
-        )
+        ix0, iy0, ix1, iy1 = sql_cover_bounds("xmin", "ymin", "xmax", "ymax", res)
         return f"""{tag}_edges AS ({edges_sql}),
 {tag}_bbox AS (
   SELECT poly_id, LEAST(MIN(ax), MIN(bx)) AS xmin,
@@ -118,10 +103,8 @@ def oracle_areal_sql(
          GREATEST(MAX(ay), MAX(by)) AS ymax
   FROM {tag}_edges GROUP BY poly_id
 ),
-{tag}_cov0 AS (SELECT poly_id, {ix0} AS ix0, {iy0} AS iy0,
-                      xmax, ymax FROM {tag}_bbox),
-{tag}_cov AS (SELECT poly_id, ix0, iy0, {ix1} AS ix1, {iy1} AS iy1
-              FROM {tag}_cov0),
+{tag}_cov AS (SELECT poly_id, {ix0} AS ix0, {iy0} AS iy0, {ix1} AS ix1, {iy1} AS iy1
+              FROM {tag}_bbox),
 {tag}_xs AS (SELECT poly_id, iy0, iy1,
                     unnest(generate_series(ix0, ix1)) AS ix
              FROM {tag}_cov),

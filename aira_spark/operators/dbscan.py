@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells import cell_from_xy, cell_ix, cell_iy, k_ring
+from ..functions.cells import cell_from_xy, cell_ix, cell_iy, k_ring, sql_ix, sql_iy
 from .dedup import duplicate_clusters
 
 
@@ -139,16 +139,7 @@ def oracle_grid_dbscan_sql(
     8-adjacency transitive closure (the raster_regions RECURSIVE pattern)
     -> border min-label join. `points_sql` must yield (x, y) rows; cell
     packing is pack + ix*2^29 + iy."""
-    n = 1 << res
-    # engine-shared ix/iy from x/y (the _sql_ix/_sql_iy formulas inline)
-    ix = (
-        f"CAST(LEAST(GREATEST(FLOOR((x - (-180.0)) / 360.0 * {float(n)}), 0),"
-        f" {n - 1}) AS BIGINT)"
-    )
-    iy = (
-        f"CAST(LEAST(GREATEST(FLOOR((y - (-90.0)) / 180.0 * {float(n)}), 0),"
-        f" {n - 1}) AS BIGINT)"
-    )
+    ix, iy = sql_ix("x", res), sql_iy("y", res)
     return f"""
 WITH RECURSIVE p AS ({points_sql}),
 cnts AS MATERIALIZED (

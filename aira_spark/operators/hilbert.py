@@ -16,23 +16,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells import (
-    DEFAULT_RES,
-    SPAN_X,
-    SPAN_Y,
-    X0,
-    Y0,
-    _clamp,
-    morton_key,
-    np_hilbert_key,
-)
-
-
-def _grid_ixy(x, y, res: int):
-    n = 1 << res
-    ix = _clamp(F.floor((x - F.lit(X0)) / F.lit(SPAN_X) * F.lit(float(n))), 0, n - 1)
-    iy = _clamp(F.floor((y - F.lit(Y0)) / F.lit(SPAN_Y) * F.lit(float(n))), 0, n - 1)
-    return ix.cast("long"), iy.cast("long")
+from ..functions.cells import DEFAULT_RES, morton_key, np_hilbert_key, sql_ix, sql_iy
 
 
 def hilbert_layout(points: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
@@ -45,11 +29,10 @@ def hilbert_layout(points: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
             np_hilbert_key(ix.to_numpy(), iy.to_numpy(), res)
         )
 
-    ix, iy = _grid_ixy(F.col("x"), F.col("y"), res)
-    g = points.select(
-        F.col("point_id").cast("long").alias("point_id"),
-        ix.alias("ix"),
-        iy.alias("iy"),
+    g = points.selectExpr(
+        "CAST(point_id AS BIGINT) AS point_id",
+        f"{sql_ix('x', res)} AS ix",
+        f"{sql_iy('y', res)} AS iy",
     )
     return g.select(
         "point_id",
@@ -72,13 +55,7 @@ def oracle_hilbert_sql(points_sql: str, res: int = DEFAULT_RES) -> str:
     """DuckDB mirror over `points_sql` (point_id, x, y)."""
     from ..functions.cells import sql_hilbert_cte
 
-    n = 1 << res
-    ix = f"LEAST(GREATEST(FLOOR((x - ({X0})) / {SPAN_X} * {float(n)}), 0), {n - 1})"
-    iy = f"LEAST(GREATEST(FLOOR((y - ({Y0})) / {SPAN_Y} * {float(n)}), 0), {n - 1})"
-    grid = (
-        f"SELECT point_id AS id, CAST({ix} AS BIGINT) AS x, "
-        f"CAST({iy} AS BIGINT) AS y FROM p"
-    )
+    grid = f"SELECT point_id AS id, {sql_ix('x', res)} AS x, {sql_iy('y', res)} AS y FROM p"
     return f"""
 WITH p AS ({points_sql}),
 g AS ({grid}),

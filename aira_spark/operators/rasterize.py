@@ -9,17 +9,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells import DEFAULT_RES, cell_bounds_xmin, cell_bounds_ymin, cell_res
+from ..functions.cells import DEFAULT_RES, sql_cell_bounds, sql_cell_size, sql_double
 from .spatial import point_in_ring, polygon_cells
 
 
 def rasterize_to_cells(polygons: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """(poly_id, cell) for every cell whose center lies inside the polygon."""
     cov = polygon_cells(polygons, res)
-    n = F.pow(F.lit(2.0), cell_res(F.col("cell")).cast("double"))
-    cx = cell_bounds_xmin(F.col("cell")) + F.lit(360.0) / n / 2.0
-    cy = cell_bounds_ymin(F.col("cell")) + F.lit(180.0) / n / 2.0
-    return cov.filter(point_in_ring(cx, cy, F.col("ring"))).select("poly_id", "cell")
+    x0, y0, _, _ = sql_cell_bounds("cell")
+    cw, ch = sql_cell_size("cell")
+    cx, cy = f"({x0} + {cw} / {sql_double(2)})", f"({y0} + {ch} / {sql_double(2)})"
+    return cov.filter(point_in_ring(cx, cy, "ring")).select("poly_id", "cell")
 
 
 def rasterize_to_tiles(

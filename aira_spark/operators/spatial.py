@@ -28,48 +28,83 @@ from ..functions.cells import (
     cell_from_xy,
     cover_rect,
     k_ring,
+    sql_any,
+    sql_cell_bounds,
+    sql_count,
+    sql_double,
+    sql_map,
+    sql_operand,
 )
 
 
-def ring_bbox(ring: Column) -> tuple[Column, Column, Column, Column]:
-    xs = F.transform(ring, lambda v: v["x"])
-    ys = F.transform(ring, lambda v: v["y"])
-    return F.array_min(xs), F.array_min(ys), F.array_max(xs), F.array_max(ys)
+def sql_ring_bbox(ring, dialect: str = "spark") -> tuple[str, str, str, str]:
+    """(xmin, ymin, xmax, ymax) of an array<struct<x,y>> ring."""
+    r = sql_operand(ring)
+    lo, hi = ("list_min", "list_max") if dialect == "duckdb" else ("array_min", "array_max")
+    xs, ys = sql_map(r, "v", "v.x", dialect), sql_map(r, "v", "v.y", dialect)
+    return f"{lo}({xs})", f"{lo}({ys})", f"{hi}({xs})", f"{hi}({ys})"
 
 
-def _ring_edges(ring: Column) -> Column:
-    """array<struct<x,y>> closed ring -> array<struct<ax,ay,bx,by>> edges —
-    the one edge construction every geometry predicate shares (a fix to
-    edge handling must not be able to diverge between predicates)."""
-    n = F.size(ring)
-    return F.zip_with(
-        F.slice(ring, 1, n - 1),
-        F.slice(ring, 2, n - 1),
-        lambda a, b: F.struct(
-            a["x"].alias("ax"), a["y"].alias("ay"), b["x"].alias("bx"), b["y"].alias("by")
-        ),
+def sql_ring_edges(ring, dialect: str = "spark") -> str:
+    """array<struct<x,y>> closed ring -> array<struct<ax,ay,bx,by>> DOUBLE
+    edges: the one edge construction every geometry predicate shares (a
+    fix to edge handling must not be able to diverge between predicates)."""
+    r = sql_operand(ring)
+    if dialect == "duckdb":
+        a, b = f"{r}[edge_i]", f"{r}[edge_i + 1]"
+    else:
+        a, b = "edge_a", "edge_b"
+    fields = [(f"a{c}", f"CAST({a}.{c} AS DOUBLE)") for c in "xy"]
+    fields += [(f"b{c}", f"CAST({b}.{c} AS DOUBLE)") for c in "xy"]
+    if dialect == "duckdb":
+        edge = "struct_pack(" + ", ".join(f"{k} := {v}" for k, v in fields) + ")"
+        return sql_map(f"generate_series(1, len({r}) - 1)", "edge_i", edge, dialect)
+    edge = "named_struct(" + ", ".join(f"'{k}', {v}" for k, v in fields) + ")"
+    return (
+        f"zip_with(slice({r}, 1, size({r}) - 1), slice({r}, 2, size({r}) - 1), "
+        f"(edge_a, edge_b) -> {edge})"
     )
 
 
-def point_in_ring(px: Column, py: Column, ring: Column) -> Column:
-    """Exact ray-casting (odd crossings) as a pure column expression.
+def sql_point_in_ring(px, py, ring, dialect: str = "spark") -> str:
+    """Exact ray-casting (odd crossings).
 
     ring: array<struct<x,y>> closed (first == last vertex). An edge (a, b)
     crosses the rightward ray from (px, py) iff (a.y > py) != (b.y > py) and
     px < (b.x - a.x) * (py - a.y) / (b.y - a.y) + a.x.
     """
-    edges = _ring_edges(ring)
-    crossings = F.aggregate(
-        edges,
-        F.lit(0),
-        lambda acc, e: acc
-        + F.when(
-            ((e["ay"] > py) != (e["by"] > py))
-            & (px < (e["bx"] - e["ax"]) * (py - e["ay"]) / (e["by"] - e["ay"]) + e["ax"]),
-            F.lit(1),
-        ).otherwise(F.lit(0)),
+    px, py = sql_double(px), sql_double(py)
+    crosses = (
+        f"(edge.ay > {py}) <> (edge.by > {py}) AND "
+        f"{px} < (edge.bx - edge.ax) * ({py} - edge.ay) / (edge.by - edge.ay) + edge.ax"
     )
-    return crossings % 2 == 1
+    return f"({sql_count(sql_ring_edges(ring, dialect), 'edge', crosses, dialect)} % 2 = 1)"
+
+
+def point_in_ring(px, py, ring) -> Column:
+    """sql_point_in_ring as a Spark Column (operands: SQL text or F.col)."""
+    return F.expr(sql_point_in_ring(px, py, ring))
+
+
+def sql_full_cell(cell, ring, dialect: str = "spark") -> str:
+    """The cell rectangle provably lies entirely inside the polygon: all 4
+    corners contained AND no edge's bbox touches the cell. Conservative:
+    any boundary contact, including degenerate corner/collinear touches
+    that a proper-crossing test would miss, demotes the cell to partial.
+    An edge whose bbox overlaps the cell MIGHT touch it (proper crossings,
+    vertices inside, degenerate contact); with no such edge and a corner
+    inside, the whole cell is interior (the boundary cannot enter without
+    an edge point in the cell)."""
+    cell, ring = sql_operand(cell), sql_operand(ring)
+    x0, y0, x1, y1 = sql_cell_bounds(cell, dialect)
+    corners = " AND ".join(
+        sql_point_in_ring(x, y, ring, dialect) for x, y in ((x0, y0), (x0, y1), (x1, y0), (x1, y1))
+    )
+    near = (
+        f"LEAST(edge.ax, edge.bx) <= {x1} AND GREATEST(edge.ax, edge.bx) >= {x0} AND "
+        f"LEAST(edge.ay, edge.by) <= {y1} AND GREATEST(edge.ay, edge.by) >= {y0}"
+    )
+    return f"({corners} AND NOT {sql_any(sql_ring_edges(ring, dialect), 'edge', near, dialect)})"
 
 
 def polygon_cells(
@@ -79,50 +114,16 @@ def polygon_cells(
     side. Bbox cover is a superset of the exact polygon cover, so the
     prefilter never loses a true match.
 
-    classify_full=True adds a `full` boolean per (poly, cell): the cell
-    rectangle provably lies entirely inside the polygon (all 4 corners
-    contained AND no edge's bbox touches the cell — conservative: any
-    boundary contact, including degenerate corner/collinear touches that a
-    proper-crossing test would miss, demotes the cell to partial). Points
-    prefiltered into a full cell are definite hits and skip the exact
+    classify_full=True adds a `full` boolean per (poly, cell) (sql_full_cell).
+    Points prefiltered into a full cell are definite hits and skip the exact
     refine — the partial/full-cell split of the Raster Intervals
     polygon-intersection prefilter (SIGMOD 2023, see PAPERS.md). A false
     'partial' only costs a ray-cast, never correctness; interior cells (the
     ones that dominate as resolution grows) stay full."""
-    from ..functions.cells import SPAN_X, SPAN_Y, cell_bounds_xmin, cell_bounds_ymin
-
-    xmin, ymin, xmax, ymax = ring_bbox(F.col("ring"))
-    out = polygons.withColumn(
-        "cell", F.explode(cover_rect(xmin, ymin, xmax, ymax, res))
-    )
+    out = polygons.withColumn("cell", F.explode(cover_rect(*sql_ring_bbox("ring"), res)))
     if not classify_full:
         return out
-    n = 1 << res
-    cw, chh = SPAN_X / n, SPAN_Y / n
-    cx0 = cell_bounds_xmin(F.col("cell"))
-    cy0 = cell_bounds_ymin(F.col("cell"))
-    cx1, cy1 = cx0 + F.lit(cw), cy0 + F.lit(chh)
-    ring = F.col("ring")
-    all_corners_in = (
-        point_in_ring(cx0, cy0, ring)
-        & point_in_ring(cx0, cy1, ring)
-        & point_in_ring(cx1, cy0, ring)
-        & point_in_ring(cx1, cy1, ring)
-    )
-    edges = _ring_edges(ring)
-    # conservative boundary test: an edge whose bbox overlaps the cell MIGHT
-    # touch it (covers proper crossings, vertices inside, and degenerate
-    # corner/collinear contact) -> cell stays partial and gets the exact
-    # ray-cast. No edge bbox overlapping + a corner inside => whole cell
-    # interior (the boundary cannot enter without an edge point in the cell).
-    edge_near_cell = F.exists(
-        edges,
-        lambda e: (F.least(e["ax"], e["bx"]) <= cx1)
-        & (F.greatest(e["ax"], e["bx"]) >= cx0)
-        & (F.least(e["ay"], e["by"]) <= cy1)
-        & (F.greatest(e["ay"], e["by"]) >= cy0),
-    )
-    return out.withColumn("full", all_corners_in & ~edge_near_cell)
+    return out.withColumn("full", F.expr(sql_full_cell("cell", "ring")))
 
 
 def point_in_polygon_join(
@@ -145,7 +146,7 @@ def point_in_polygon_join(
     identical (pinned by test), only the physical distribution changes. Pair
     with operators/skew.py salting when single cells are hot.
     """
-    pts = points.withColumn("cell", cell_from_xy(F.col(x), F.col(y), res))
+    pts = points.withColumn("cell", cell_from_xy(x, y, res))
     # full-cell classification: points landing in a cell entirely inside the
     # polygon skip the ray-cast (codegen short-circuits the OR per row)
     poly = polygon_cells(polygons, res, classify_full=True)
@@ -153,7 +154,7 @@ def point_in_polygon_join(
         poly = F.broadcast(poly)
     cand = pts.join(poly, "cell")
     return cand.filter(
-        F.col("full") | point_in_ring(F.col(x), F.col(y), F.col("ring"))
+        F.expr(f"`full` OR {sql_point_in_ring(x, y, 'ring')}")
     ).drop("cell", "ring", "full")
 
 
@@ -179,28 +180,19 @@ def within_distance_join(
     """
     from ..functions.cells import cover_rect_closed
 
+    d = sql_double(d)
     # closed cover: the predicate is inclusive (dist <= d), so a point at
     # exactly x == qx + d must have its cell in the prefilter
-    q = queries.select(
-        "query_id", F.col(x).alias("qx"), F.col(y).alias("qy")
-    ).withColumn(
+    q = queries.selectExpr("query_id", f"{x} AS qx", f"{y} AS qy").withColumn(
         "cell",
-        F.explode(
-            cover_rect_closed(
-                F.col("qx") - F.lit(d), F.col("qy") - F.lit(d),
-                F.col("qx") + F.lit(d), F.col("qy") + F.lit(d), res,
-            )
-        ),
+        F.explode(cover_rect_closed(f"qx - {d}", f"qy - {d}", f"qx + {d}", f"qy + {d}", res)),
     )
-    pts = points.withColumn("cell", cell_from_xy(F.col(x), F.col(y), res))
-    dist = F.sqrt(
-        (F.col(x) - F.col("qx")) * (F.col(x) - F.col("qx"))
-        + (F.col(y) - F.col("qy")) * (F.col(y) - F.col("qy"))
-    )
+    pts = points.withColumn("cell", cell_from_xy(x, y, res))
+    dist = f"SQRT(({x} - qx) * ({x} - qx) + ({y} - qy) * ({y} - qy))"
     return (
         pts.join(F.broadcast(q), "cell")
-        .withColumn("dist", dist)
-        .filter(F.col("dist") <= F.lit(d))
+        .withColumn("dist", F.expr(dist))
+        .filter(f"dist <= {d}")
         .drop("cell", "qx", "qy")
     )
 
@@ -217,38 +209,34 @@ def within_distance_km_join(
     great-circle km (haversine on the mean sphere). Same plan shape as
     within_distance_join — broadcast closed cell cover of each query's disk
     bbox, point side unshuffled — but the bbox half-extents are the proven
-    spherical superset bounds from functions.geo.disk_margins_deg (latitude-
-    dependent longitude margin; clamps to full-longitude near the poles),
-    and intervals crossing the +-180 antimeridian additionally cover the
-    wrapped remainder (haversine wraps; a planar clip would silently drop
+    spherical superset bounds from functions.geo.sql_disk_margins_deg
+    (latitude-dependent longitude margin; clamps to full-longitude near the
+    poles), and intervals crossing the +-180 antimeridian additionally cover
+    the wrapped remainder (haversine wraps; a planar clip would silently drop
     wrapped-close pairs). Returns (query_id, point_id, dist_km).
     """
-    from ..functions.cells import cover_rect_closed
-    from ..functions.geo import disk_margins_deg, haversine_km
+    from ..functions.cells import sql_cover
+    from ..functions.geo import haversine_km, sql_disk_margins_deg
 
-    dlat, dlon = disk_margins_deg(F.col("qy"), d_km)
-    qx, qy = F.col("qx"), F.col("qy")
-    ylo, yhi = qy - dlat, qy + dlat
+    dlat, dlon = sql_disk_margins_deg("qy", d_km)
+    ylo, yhi = f"qy - {dlat}", f"qy + {dlat}"
+    w, e = sql_double(-180.0), sql_double(180.0)
+    turn = sql_double(360.0)
+
+    def cover(xmin: str, xmax: str) -> str:
+        return sql_cover(xmin, ylo, xmax, yhi, res, "closed")
+
     # antimeridian wrap: the haversine's sin^2(dlon/2) term has period 360,
     # so a disk crossing +-180 continues on the far side of the x domain —
     # the cover is the clamped primary interval plus the wrapped remainder(s)
-    empty = F.array().cast("array<bigint>")
-    primary = cover_rect_closed(qx - dlon, ylo, qx + dlon, yhi, res)
-    wrap_w = F.when(
-        qx - dlon < F.lit(-180.0),
-        cover_rect_closed(qx - dlon + F.lit(360.0), ylo, F.lit(180.0), yhi, res),
-    ).otherwise(empty)
-    wrap_e = F.when(
-        qx + dlon > F.lit(180.0),
-        cover_rect_closed(F.lit(-180.0), ylo, qx + dlon - F.lit(360.0), yhi, res),
-    ).otherwise(empty)
-    q = queries.select(
-        "query_id", F.col(x).alias("qx"), F.col(y).alias("qy")
-    ).withColumn(
-        "cell",
-        F.explode(F.array_distinct(F.concat(primary, wrap_w, wrap_e))),
+    empty = "CAST(array() AS array<bigint>)"
+    primary = cover(f"qx - {dlon}", f"qx + {dlon}")
+    wrap_w = f"CASE WHEN qx - {dlon} < {w} THEN {cover(f'qx - {dlon} + {turn}', e)} ELSE {empty} END"
+    wrap_e = f"CASE WHEN qx + {dlon} > {e} THEN {cover(w, f'qx + {dlon} - {turn}')} ELSE {empty} END"
+    q = queries.selectExpr("query_id", f"{x} AS qx", f"{y} AS qy").withColumn(
+        "cell", F.expr(f"explode(array_distinct(concat({primary}, {wrap_w}, {wrap_e})))")
     )
-    pts = points.withColumn("cell", cell_from_xy(F.col(x), F.col(y), res))
+    pts = points.withColumn("cell", cell_from_xy(x, y, res))
     return (
         pts.join(F.broadcast(q), "cell")
         .withColumn("dist_km", haversine_km(F.col("qy"), F.col("qx"), F.col(y), F.col(x)))
@@ -257,24 +245,25 @@ def within_distance_km_join(
     )
 
 
-def _orient(ax, ay, bx, by, px, py) -> Column:
+def _orient(ax, ay, bx, by, px, py) -> str:
     """Signed area orientation of (a -> b -> p); same expression text as the
     DuckDB oracle so float results are bit-identical."""
-    return (bx - ax) * (py - ay) - (by - ay) * (px - ax)
+    return f"(({bx} - {ax}) * ({py} - {ay}) - ({by} - {ay}) * ({px} - {ax}))"
 
 
-def _seg_cross(ax, ay, bx, by, cx, cy, dx, dy) -> Column:
+def _seg_cross(ax, ay, bx, by, cx, cy, dx, dy) -> str:
     """Proper (strict) segment intersection of (a,b) x (c,d): each segment's
     endpoints lie strictly on opposite sides of the other's line."""
     o1 = _orient(ax, ay, bx, by, cx, cy)
     o2 = _orient(ax, ay, bx, by, dx, dy)
     o3 = _orient(cx, cy, dx, dy, ax, ay)
     o4 = _orient(cx, cy, dx, dy, bx, by)
-    return (o1 * o2 < 0) & (o3 * o4 < 0)
+    return f"({o1} * {o2} < 0 AND {o3} * {o4} < 0)"
 
 
-def rect_intersects_ring(xmin, ymin, xmax, ymax, ring: Column) -> Column:
-    """Exact rect x simple-polygon intersection as a pure column expression.
+def rect_intersects_ring(xmin, ymin, xmax, ymax, ring) -> Column:
+    """Exact rect x simple-polygon intersection as one Spark SQL expression
+    (operands: SQL text, F.col references or F.expr Columns).
 
     True iff (a) any polygon vertex is inside the closed rect (covers
     polygon-in-rect and partial overlap), or (b) any rect corner is inside
@@ -289,47 +278,26 @@ def rect_intersects_ring(xmin, ymin, xmax, ymax, ring: Column) -> Column:
     for simple polygons including touch-degenerate contact. The DuckDB
     oracle states the identical four cases with the same expression text.
     """
-    vert_in_rect = F.exists(
-        ring,
-        lambda v: (v["x"] >= xmin) & (v["x"] <= xmax)
-        & (v["y"] >= ymin) & (v["y"] <= ymax),
+    xmin, ymin, xmax, ymax, ring = (sql_operand(v) for v in (xmin, ymin, xmax, ymax, ring))
+    corners = ((xmin, ymin), (xmin, ymax), (xmax, ymin), (xmax, ymax))
+    vert_in_rect = sql_any(
+        ring, "v", f"v.x >= {xmin} AND v.x <= {xmax} AND v.y >= {ymin} AND v.y <= {ymax}"
     )
-    corner_in_poly = (
-        point_in_ring(xmin, ymin, ring)
-        | point_in_ring(xmin, ymax, ring)
-        | point_in_ring(xmax, ymin, ring)
-        | point_in_ring(xmax, ymax, ring)
+    corner_in_poly = " OR ".join(sql_point_in_ring(px, py, ring) for px, py in corners)
+    ax, ay, bx, by = "edge.ax", "edge.ay", "edge.bx", "edge.by"
+    rect_sides = ((xmin, ymin, xmax, ymin), (xmax, ymin, xmax, ymax),
+                  (xmax, ymax, xmin, ymax), (xmin, ymax, xmin, ymin))
+    crosses_rect_edge = " OR ".join(_seg_cross(ax, ay, bx, by, *side) for side in rect_sides)
+    corner_on_edge = " OR ".join(
+        f"({_orient(ax, ay, bx, by, px, py)} = 0"
+        f" AND {px} >= LEAST({ax}, {bx}) AND {px} <= GREATEST({ax}, {bx})"
+        f" AND {py} >= LEAST({ay}, {by}) AND {py} <= GREATEST({ay}, {by}))"
+        for px, py in corners
     )
-    edges = _ring_edges(ring)
-
-    def crosses_rect_edge(e) -> Column:
-        ax, ay, bx, by = e["ax"], e["ay"], e["bx"], e["by"]
-        return (
-            _seg_cross(ax, ay, bx, by, xmin, ymin, xmax, ymin)
-            | _seg_cross(ax, ay, bx, by, xmax, ymin, xmax, ymax)
-            | _seg_cross(ax, ay, bx, by, xmax, ymax, xmin, ymax)
-            | _seg_cross(ax, ay, bx, by, xmin, ymax, xmin, ymin)
-        )
-
-    def corner_on_edge(e) -> Column:
-        ax, ay, bx, by = e["ax"], e["ay"], e["bx"], e["by"]
-
-        def on(px, py) -> Column:
-            return (
-                (_orient(ax, ay, bx, by, px, py) == 0)
-                & (px >= F.least(ax, bx)) & (px <= F.greatest(ax, bx))
-                & (py >= F.least(ay, by)) & (py <= F.greatest(ay, by))
-            )
-
-        return (
-            on(xmin, ymin) | on(xmin, ymax) | on(xmax, ymin) | on(xmax, ymax)
-        )
-
-    return (
-        vert_in_rect
-        | corner_in_poly
-        | F.exists(edges, crosses_rect_edge)
-        | F.exists(edges, corner_on_edge)
+    edges = sql_ring_edges(ring)
+    return F.expr(
+        f"{vert_in_rect} OR {corner_in_poly} OR {sql_any(edges, 'edge', crosses_rect_edge)}"
+        f" OR {sql_any(edges, 'edge', corner_on_edge)}"
     )
 
 
@@ -355,23 +323,14 @@ def footprint_polygon_join(
     from ..functions.cells import cover_rect_touch
     from .chunks import footprint
 
+    rect = ("fp_xmin", "fp_ymin", "fp_xmax", "fp_ymax")
     fp = footprint(images_with_meta)
-    fp_cells = fp.withColumn(
-        "cell",
-        F.explode(
-            cover_rect_touch(
-                F.col("fp_xmin"), F.col("fp_ymin"), F.col("fp_xmax"), F.col("fp_ymax"), res
-            )
-        ),
-    ).select("image_id", "fp_xmin", "fp_ymin", "fp_xmax", "fp_ymax", "cell")
+    fp_cells = fp.withColumn("cell", F.explode(cover_rect_touch(*rect, res))).select(
+        "image_id", *rect, "cell"
+    )
     poly = F.broadcast(polygon_cells(polygons, res).select("cell", "poly_id", "ring"))
     cand = fp_cells.join(poly, "cell").dropDuplicates(["image_id", "poly_id"])
-    return cand.filter(
-        rect_intersects_ring(
-            F.col("fp_xmin"), F.col("fp_ymin"), F.col("fp_xmax"), F.col("fp_ymax"),
-            F.col("ring"),
-        )
-    ).select("image_id", "poly_id")
+    return cand.filter(rect_intersects_ring(*rect, "ring")).select("image_id", "poly_id")
 
 
 def footprint_overlap_join(
@@ -407,13 +366,11 @@ def footprint_overlap_join(
         "image_id", "fp_xmin", "fp_ymin", "fp_xmax", "fp_ymax"
     )
     p = F.lit(float(pad))
+    ps = sql_double(pad)
     a = fp.withColumn(
         "cell",
         F.explode(
-            cover_rect(
-                F.col("fp_xmin") - p, F.col("fp_ymin") - p,
-                F.col("fp_xmax") + p, F.col("fp_ymax") + p, res,
-            )
+            cover_rect(f"fp_xmin - {ps}", f"fp_ymin - {ps}", f"fp_xmax + {ps}", f"fp_ymax + {ps}", res)
         ),
     ).select(
         "cell", F.col("image_id").alias("image_a"),
@@ -421,13 +378,7 @@ def footprint_overlap_join(
         F.col("fp_xmax").alias("ax1"), F.col("fp_ymax").alias("ay1"),
     )
     b = fp.withColumn(
-        "cell",
-        F.explode(
-            cover_rect(
-                F.col("fp_xmin"), F.col("fp_ymin"),
-                F.col("fp_xmax"), F.col("fp_ymax"), res,
-            )
-        ),
+        "cell", F.explode(cover_rect("fp_xmin", "fp_ymin", "fp_xmax", "fp_ymax", res))
     ).select(
         "cell", F.col("image_id").alias("image_b"),
         F.col("fp_xmin").alias("bx0"), F.col("fp_ymin").alias("by0"),
@@ -509,12 +460,12 @@ def knn_join(
         F.col("point_id").alias("neighbor_id"),
         F.col("x").alias("px"),
         F.col("y").alias("py"),
-        cell_from_xy(F.col("x"), F.col("y"), res).alias("cell"),
+        cell_from_xy("x", "y", res).alias("cell"),
     ).repartition(par).persist()
     n_points = pts.count()
     pending = queries.select(
         "query_id", F.col("x").alias("qx"), F.col("y").alias("qy"),
-        cell_from_xy(F.col("x"), F.col("y"), res).alias("qcell"),
+        cell_from_xy("x", "y", res).alias("qcell"),
     ).persist()
 
     # density-based radius: finalization needs the k-th neighbor inside the
@@ -542,7 +493,7 @@ def knn_join(
             .filter(F.col("rank") <= k)
         )
 
-    ringed = pending.withColumn("cell", F.explode(k_ring(F.col("qcell"), radius)))
+    ringed = pending.withColumn("cell", F.explode(k_ring("qcell", radius)))
     ranked = rank_candidates(ringed.join(pts, "cell")).persist()
     if metric == "haversine":
         from ..functions.geo import EARTH_RADIUS_KM as _R

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells import DEFAULT_RES, cell_ix, cell_iy
+from ..functions.cells import DEFAULT_RES, cell_ix, cell_iy, sql_ix, sql_iy
 from .mosaic import mosaic_cell_values
 
 SEED_ENC = 1 << 20
@@ -44,7 +44,6 @@ def voronoi_census(
     """(seed_id, n_cells, sum_val, d2_min, d2_max) per seed from `seeds`
     carrying (seed_id bigint, x double, y double in degrees); empty
     regions ship n_cells = 0 with -1 extremes."""
-    nf = 1 << (res + patch_bits)
     pb = 1 << patch_bits
     chk = seeds.agg(
         F.max("seed_id").alias("mx"), F.min("seed_id").alias("mn")
@@ -57,10 +56,8 @@ def voronoi_census(
         )
     sg = seeds.selectExpr(
         "CAST(seed_id AS BIGINT) AS seed_id",
-        f"CAST(LEAST(GREATEST(FLOOR((x - (-180.0)) / 360.0 * {float(nf)}),"
-        f" 0), {nf - 1}) AS BIGINT) AS sx",
-        f"CAST(LEAST(GREATEST(FLOOR((y - (-90.0)) / 180.0 * {float(nf)}),"
-        f" 0), {nf - 1}) AS BIGINT) AS sy",
+        f"{sql_ix('x', res + patch_bits)} AS sx",
+        f"{sql_iy('y', res + patch_bits)} AS sy",
     )
     fine = mosaic_cell_values(images, res, patch_bits).select(
         (cell_ix(F.col("cell")) * pb + F.col("pc")).alias("fx"),
@@ -110,14 +107,11 @@ def oracle_voronoi_sql(
     """DuckDB mirror over a WITH chain ending in fine(fx, fy, val) and a
     subquery yielding seeds (seed_id, x, y): identical snap, encoded
     argmin and zero-region left join."""
-    nf = 1 << (res + patch_bits)
     return f"""{fine_cte},
 sg AS (
   SELECT CAST(seed_id AS BIGINT) AS seed_id,
-    CAST(LEAST(GREATEST(FLOOR((x - (-180.0)) / 360.0 * {float(nf)}), 0),
-         {nf - 1}) AS BIGINT) AS sx,
-    CAST(LEAST(GREATEST(FLOOR((y - (-90.0)) / 180.0 * {float(nf)}), 0),
-         {nf - 1}) AS BIGINT) AS sy
+    {sql_ix('x', res + patch_bits)} AS sx,
+    {sql_iy('y', res + patch_bits)} AS sy
   FROM ({seeds_sql})
 ),
 asg AS (

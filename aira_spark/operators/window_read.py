@@ -126,12 +126,27 @@ def read_window_pruned(
     partition column — Catalyst turns it into PartitionFilters and never
     opens files outside the region (partition pruning at the scan, the
     Spark analog of the reference's seek-past-unneeded-chunks).
+
+    Only the cover's partition directories are listed: a glob over
+    `part_cell={c1,c2,...}` read with `basePath`, so the scan never lists
+    the whole table (past `parallelPartitionDiscovery.threshold`
+    directories that listing is a Spark job of its own). The IN filter
+    stays, so the rows cannot differ from a full-table read. When no
+    directory matches, the full-table read (filtered to nothing) keeps the
+    table's schema.
     """
     from ..functions.cells import np_cover_rect
 
-    cover = np_cover_rect(x0 - margin, y0 - margin, x1 + margin, y1 + margin, res)
-    df = spark.read.parquet(path)
-    return df.filter(F.col("part_cell").isin([int(c) for c in cover]))
+    cover = [int(c) for c in np_cover_rect(x0 - margin, y0 - margin, x1 + margin, y1 + margin, res)]
+    jvm = spark.sparkContext._jvm
+    pattern = jvm.org.apache.hadoop.fs.Path(f"{path}/part_cell={{{','.join(map(str, cover))}}}")
+    fs = pattern.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    dirs = [str(st.getPath()) for st in (fs.globStatus(pattern) or [])]
+    if dirs:
+        df = spark.read.option("basePath", path).parquet(*dirs)
+    else:
+        df = spark.read.parquet(path)
+    return df.filter(F.col("part_cell").isin(cover))
 
 
 def window_read(

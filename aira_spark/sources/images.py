@@ -248,15 +248,17 @@ def _with_footprint_keys(images: DataFrame, keys) -> DataFrame:
     from the footprint CENTER of each image's geotransform (the single
     source of the cx/cy formula for every spatial writer).
 
-    keys: list of (col_name, fn) where fn(cx, cy) -> integer Column; rows
-    without a valid geotransform (decode error or no scale) get -1 in every
-    key column so full-table scans still see them."""
+    keys: list of (col_name, fn) where fn(cx, cy) -> integer Column, with
+    cx/cy given as SQL text; rows without a valid geotransform (decode error
+    or no scale) get -1 in every key column so full-table scans still see
+    them."""
+    from ..functions.cells import sql_double
     from ..functions.udfs import decode_meta
 
-    m = F.col("meta")
-    cx = (m["tie_x"] - m["tie_i"] * m["scale_x"]) + m["width"].cast("double") * m["scale_x"] / 2.0
-    cy = (m["tie_y"] + m["tie_j"] * m["scale_y"]) - m["height"].cast("double") * m["scale_y"] / 2.0
-    valid = m["error"].isNull() & m["scale_x"].isNotNull()
+    two = sql_double(2.0)
+    cx = f"(meta.tie_x - meta.tie_i * meta.scale_x) + CAST(meta.width AS DOUBLE) * meta.scale_x / {two}"
+    cy = f"(meta.tie_y + meta.tie_j * meta.scale_y) - CAST(meta.height AS DOUBLE) * meta.scale_y / {two}"
+    valid = F.expr("meta.error IS NULL AND meta.scale_x IS NOT NULL")
     df = images.withColumn("meta", decode_meta(F.col("bytes")))
     for name, fn in keys:
         df = df.withColumn(name, F.when(valid, fn(cx, cy)).otherwise(F.lit(-1)))

@@ -121,7 +121,7 @@ def test_geodesic_disk_margins_are_superset(qx, qy, px, py, d_km):
     dist = 2.0 * EARTH_RADIUS_KM * math.asin(math.sqrt(h))
     if dist > d_km:
         return
-    # margins (python mirror of functions.geo.disk_margins_deg)
+    # margins (python mirror of functions.geo.sql_disk_margins_deg)
     dlat = math.degrees(d_km / EARTH_RADIUS_KM)
     phi_max = abs(qy) + dlat
     if phi_max >= 89.9:
@@ -152,15 +152,20 @@ def test_closed_cover_includes_boundary_cells(x, y, dw, dh):
         assert int(np_cell_from_xy(px, py, res)) in cover
 
 
-def _np_cover_closed(xmin, ymin, xmax, ymax, res):
-    """numpy mirror of cells.cover_rect_closed (floor upper bound)."""
+def _np_cover_closed(xmin, ymin, xmax, ymax, res, touch=False):
+    """numpy mirror of cells.cover_rect_closed (floor upper bound); with
+    touch=True, of cover_rect_touch (a low bound exactly on a grid line
+    also takes the cell below)."""
     import math
 
     n = 1 << res
     def clamp(v):
         return min(max(v, 0), n - 1)
-    ix0 = clamp(math.floor((xmin + 180.0) / 360.0 * n))
-    iy0 = clamp(math.floor((ymin + 90.0) / 180.0 * n))
+
+    def lo(t):
+        return clamp(math.floor(t) - (1 if touch and t == math.floor(t) else 0))
+    ix0 = lo((xmin + 180.0) / 360.0 * n)
+    iy0 = lo((ymin + 90.0) / 180.0 * n)
     ix1 = max(clamp(math.floor((xmax + 180.0) / 360.0 * n)), ix0)
     iy1 = max(clamp(math.floor((ymax + 90.0) / 180.0 * n)), iy0)
     from aira_spark.functions.cells import np_cell_pack
@@ -234,7 +239,9 @@ def test_zordered_layout_locality(spark, sf_dir, tmp_path):
     cy = (m["tie_y"] + m["tie_j"] * m["scale_y"]) - m["height"].cast("double") * m["scale_y"] / 2.0
     mismatch = (
         with_meta(back)
-        .select("zkey", morton_from_xy(cx, cy, 8).alias("rz"))
+        .withColumn("cx", cx)
+        .withColumn("cy", cy)
+        .select("zkey", morton_from_xy("cx", "cy", 8).alias("rz"))
         .filter(F.col("zkey") != F.col("rz"))
         .count()
     )
@@ -254,3 +261,224 @@ def test_zordered_layout_locality(spark, sf_dir, tmp_path):
         ).select("image_id").collect()
     }
     assert ids_z == ids_full
+
+
+# ------------------------------------------- one SQL text, two engines
+
+
+def _eval_both(spark, cols, rows, texts):
+    """Evaluate each SQL text over `rows` in Spark (F.expr) and in DuckDB
+    (dialect="duckdb" texts); `cols` is [(name, spark_ddl, arrow_type)].
+    Returns (spark_rows, duckdb_rows), one tuple per input row."""
+    import duckdb
+    import pyarrow as pa
+
+    ddl = ", ".join(f"{n} {t}" for n, t, _ in [("row_id", "bigint", None), *cols])
+    data = [(i, *r) for i, r in enumerate(rows)]
+    sdf = spark.createDataFrame(data, ddl)
+    spark_rows = [
+        tuple(r)[1:]
+        for r in sdf.selectExpr("row_id", *(f"{s} AS c{i}" for i, (s, _) in enumerate(texts)))
+        .orderBy("row_id")
+        .collect()
+    ]
+    table = pa.Table.from_pylist(
+        [dict(zip(["row_id", *(n for n, _, _ in cols)], r)) for r in data],
+        schema=pa.schema([("row_id", pa.int64()), *((n, t) for n, _, t in cols)]),
+    )
+    con = duckdb.connect()
+    con.register("t", table)
+    select = ", ".join(f"{d} AS c{i}" for i, (_, d) in enumerate(texts))
+    duck_rows = [tuple(r)[1:] for r in con.sql(f"SELECT row_id, {select} FROM t ORDER BY row_id").fetchall()]
+    return spark_rows, duck_rows
+
+
+def _texts(build, *args, **kw):
+    """(spark text, duckdb text) of one builder call."""
+    return build(*args, **kw), build(*args, **kw, dialect="duckdb")
+
+
+def test_sql_cell_texts_match_numpy_in_both_engines(spark):
+    """cell_from_xy / res / ix / iy / parent / bounds text == numpy, in Spark
+    and DuckDB: points on grid lines, on the world edges and outside the
+    world, plus an integer-typed operand (a bare DECIMAL literal would
+    change its arithmetic)."""
+    import pyarrow as pa
+
+    from aira_spark.functions.cells import (
+        sql_cell_bounds,
+        sql_cell_from_xy,
+        sql_cell_iy,
+        sql_cell_ix,
+        sql_cell_parent,
+        sql_cell_res,
+    )
+
+    pts = [(-180.0, -90.0), (180.0, 90.0), (-180.0, 90.0), (180.0, -90.0),
+           (0.0, 0.0), (-250.0, 120.0), (400.0, -91.0), (179.9999999, 89.9999999),
+           (-179.9999999, -89.9999999), (12.3, -45.6)]
+    for res in (0, 3, 7, 12, 20):
+        n = 1 << res
+        pts += [(-180.0 + i * 360.0 / n, -90.0 + j * 180.0 / n) for i, j in ((1, 1), (n // 2, n // 3), (n - 1, n - 1))]
+    ints = [(int(x), int(y)) for x, y in pts]
+    rows = [(x, y, xi, yi) for (x, y), (xi, yi) in zip(pts, ints)]
+    cols = [("x", "double", pa.float64()), ("y", "double", pa.float64()),
+            ("xi", "int", pa.int32()), ("yi", "int", pa.int32())]
+    # at res 20 a DECIMAL quotient (rounded to 6 places) is off by up to
+    # half a cell, so the integer operand catches a literal left DECIMAL
+    for res in (0, 3, 7, 12, 20):
+        cell = sql_cell_from_xy("x", "y", res)
+        texts = [
+            (cell, cell),
+            (sql_cell_from_xy("xi", "yi", res),) * 2,
+            _texts(sql_cell_res, cell),
+            _texts(sql_cell_ix, cell),
+            _texts(sql_cell_iy, cell),
+            *zip(sql_cell_bounds(cell), sql_cell_bounds(cell, dialect="duckdb")),
+        ]
+        if res:
+            texts.append(_texts(sql_cell_parent, cell))
+        got_spark, got_duck = _eval_both(spark, cols, rows, texts)
+        for (x, y, xi, yi), gs, gd in zip(rows, got_spark, got_duck):
+            c = int(np_cell_from_xy(x, y, res))
+            want = [c, int(np_cell_from_xy(float(xi), float(yi), res)),
+                    int(np_cell_res(c)), int(np_cell_ix(c)), int(np_cell_iy(c)),
+                    *(float(v) for v in np_cell_bounds(c))]
+            if res:
+                want.append(int(np_cell_parent(c)))
+            assert list(gs) == want, (res, x, y)
+            assert list(gd) == want, (res, x, y)
+
+
+def test_sql_cover_texts_match_numpy_in_both_engines(spark):
+    """sql_cover (half-open / closed / touch) == the numpy covers in Spark
+    and DuckDB: degenerate rects, rects on grid lines, touching rects,
+    rects over and past the world edges, an inverted rect and an
+    integer-typed rect."""
+    import pyarrow as pa
+
+    from aira_spark.functions.cells import sql_cover
+
+    for res in (3, 7):
+        n = 1 << res
+        gx = lambda i: -180.0 + i * 360.0 / n  # noqa: E731
+        gy = lambda j: -90.0 + j * 180.0 / n  # noqa: E731
+        rects = [
+            (10.0, 20.0, 10.0, 20.0),                  # degenerate interior point
+            (gx(3), gy(2), gx(3), gy(2)),              # degenerate on a grid corner
+            (gx(2), gy(1), gx(4), gy(3)),              # edges on grid lines
+            (gx(2) - 1.0, 0.0, gx(2), 3.0),            # touches the next rect's left edge
+            (gx(2), 0.0, gx(2) + 1.0, 3.0),
+            (gx(5), gy(5), gx(6), gy(6)),              # touches the next rect at a corner
+            (gx(6), gy(6), gx(7), gy(7)),
+            (-190.0, -95.0, -170.0, -80.0),            # past the world's low corner
+            (170.0, 80.0, 190.0, 95.0),                # past the high corner
+            (200.0, 100.0, 210.0, 110.0),              # outside the world
+            (5.0, 5.0, 1.0, 1.0),                      # inverted
+            (-180.0, -90.0, 180.0, 90.0),              # the whole world
+        ]
+        rows = [(*r, int(r[0]), int(r[1]), int(r[2]), int(r[3])) for r in rects]
+        cols = [(c, "double", pa.float64()) for c in ("x0", "y0", "x1", "y1")]
+        cols += [(c, "bigint", pa.int64()) for c in ("i0", "j0", "i1", "j1")]
+        modes = ("half_open", "closed", "touch")
+        texts = [_texts(sql_cover, "x0", "y0", "x1", "y1", res, m) for m in modes]
+        texts += [_texts(sql_cover, "i0", "j0", "i1", "j1", res, m) for m in modes]
+        got_spark, got_duck = _eval_both(spark, cols, rows, texts)
+
+        def ref(r):
+            return [np_cover_rect(*r, res), _np_cover_closed(*r, res),
+                    _np_cover_closed(*r, res, touch=True)]
+
+        for r, gs, gd in zip(rows, got_spark, got_duck):
+            want = ref(r[:4]) + ref(tuple(float(v) for v in r[4:]))
+            assert [list(v) for v in gs] == want, (res, r)
+            assert [list(v) for v in gd] == want, (res, r)
+        # touching rects share a cell between one's touch cover and the
+        # other's half-open cover, in both directions
+        for a, b in ((rects[3], rects[4]), (rects[5], rects[6])):
+            for p, q in ((a, b), (b, a)):
+                assert set(_np_cover_closed(*p, res, touch=True)) & set(np_cover_rect(*q, res))
+
+
+def test_sql_k_ring_matches_numpy_in_both_engines(spark):
+    """sql_k_ring == np_k_ring at the grid corners and edges and over a
+    mixed-resolution cell column (each cell rings at its own res)."""
+    import pyarrow as pa
+
+    from aira_spark.functions.cells import sql_k_ring
+
+    cells = []
+    for res in (0, 1, 3, 7, 12):
+        n = 1 << res
+        for ix, iy in ((0, 0), (n - 1, n - 1), (0, n - 1), (n - 1, 0), (n // 2, 0), (n // 3, n // 2)):
+            cells.append(int(np_cell_pack(res, ix, iy)))
+    texts = [_texts(sql_k_ring, "cell", k) for k in (0, 1, 2)]
+    got_spark, got_duck = _eval_both(spark, [("cell", "bigint", pa.int64())], [(c,) for c in cells], texts)
+    for c, gs, gd in zip(cells, got_spark, got_duck):
+        want = [np_k_ring(c, k) for k in (0, 1, 2)]
+        assert [list(v) for v in gs] == want, c
+        assert [list(v) for v in gd] == want, c
+
+
+def _ray_cast(px, py, ring):
+    inside = False
+    for (ax, ay), (bx, by) in zip(ring[:-1], ring[1:]):
+        if (ay > py) != (by > py) and px < (bx - ax) * (py - ay) / (by - ay) + ax:
+            inside = not inside
+    return inside
+
+
+def test_sql_ring_predicates_match_reference_in_both_engines(spark):
+    """sql_point_in_ring, sql_ring_bbox and the full-cell test of
+    polygon_cells == a Python reference in Spark and DuckDB. The cells
+    cover the four ways a cell's corners can sit: all inside (full), all
+    inside with an edge cutting in (partial), corners on the boundary, and
+    outside. One point operand is integer-typed."""
+    import pyarrow as pa
+
+    from aira_spark.operators.spatial import sql_full_cell, sql_point_in_ring, sql_ring_bbox
+
+    res = 4
+    n = 1 << res
+    cw, ch = 360.0 / n, 180.0 / n
+    gx = lambda i: -180.0 + i * cw  # noqa: E731
+    gy = lambda j: -90.0 + j * ch  # noqa: E731
+    square = [(gx(2), gy(2)), (gx(8), gy(2)), (gx(8), gy(8)), (gx(2), gy(8)), (gx(2), gy(2))]
+    # the square with a notch cut into cell (4, 4) from its bottom edge
+    notched = [(gx(2), gy(2)), (gx(4) + 1.0, gy(2)), (gx(4) + 1.0, gy(4) + 1.0),
+               (gx(4) + 2.0, gy(4) + 1.0), (gx(4) + 2.0, gy(2)), (gx(8), gy(2)),
+               (gx(8), gy(8)), (gx(2), gy(8)), (gx(2), gy(2))]
+    triangle = [(0.0, 0.0), (90.0, 0.0), (0.0, 60.0), (0.0, 0.0)]
+    cells = [(5, 5), (4, 4), (2, 2), (7, 7), (1, 1), (12, 12), (8, 4), (9, 9)]
+    points = [(gx(3), gy(3)), (gx(2), gy(5)), (gx(8), gy(5)), (0.5, 0.5), (100.0, 10.0),
+              (gx(4) + 1.5, gy(3)), (-179.0, 0.0)]
+    rows = []
+    for ring in (square, notched, triangle):
+        for (ix, iy), (px, py) in zip(cells, points + points[:1]):
+            rows.append((ring, int(np_cell_pack(res, ix, iy)), px, py, int(px)))
+    pa_ring = pa.list_(pa.struct([("x", pa.float64()), ("y", pa.float64())]))
+    cols = [("ring", "array<struct<x:double,y:double>>", pa_ring), ("cell", "bigint", pa.int64()),
+            ("px", "double", pa.float64()), ("py", "double", pa.float64()), ("pxi", "int", pa.int32())]
+    texts = [
+        _texts(sql_point_in_ring, "px", "py", "ring"),
+        _texts(sql_point_in_ring, "pxi", "py", "ring"),
+        _texts(sql_full_cell, "cell", "ring"),
+        *zip(sql_ring_bbox("ring"), sql_ring_bbox("ring", dialect="duckdb")),
+    ]
+    as_structs = [([{"x": x, "y": y} for x, y in ring], *rest) for ring, *rest in rows]
+    got_spark, got_duck = _eval_both(spark, cols, as_structs, texts)
+    n_full = 0
+    for (ring, cell, px, py, pxi), gs, gd in zip(rows, got_spark, got_duck):
+        x0, y0, x1, y1 = (float(v) for v in np_cell_bounds(cell))
+        corners_in = all(_ray_cast(cx, cy, ring) for cx, cy in ((x0, y0), (x0, y1), (x1, y0), (x1, y1)))
+        near = any(
+            min(ax, bx) <= x1 and max(ax, bx) >= x0 and min(ay, by) <= y1 and max(ay, by) >= y0
+            for (ax, ay), (bx, by) in zip(ring[:-1], ring[1:])
+        )
+        xs, ys = [v[0] for v in ring], [v[1] for v in ring]
+        want = [_ray_cast(px, py, ring), _ray_cast(float(pxi), py, ring), corners_in and not near,
+                min(xs), min(ys), max(xs), max(ys)]
+        n_full += want[2]
+        assert list(gs) == want, (ring, cell, px, py)
+        assert list(gd) == want, (ring, cell, px, py)
+    assert 0 < n_full < len(rows)
